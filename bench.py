@@ -107,8 +107,7 @@ def main() -> int:
         for fn in os.listdir(data):
             os.symlink(os.path.join(data, fn), os.path.join(sdata, fn))
         # throughput configuration, A/B-measured at local[32] on this
-        # input (scripts/tune_stream_bench.py + profile_stream_residue.py,
-        # round 5): trigger 64 (ONE feed batch over the 64 input files +
+        # input (round 5): trigger 64 (ONE feed batch over the 64 input files +
         # one flush batch) beats trigger 32 by ~19% warm (24.2s vs 30.0s)
         # and trigger 32 beats 16 by ~1.4x — at 32 cores the per-batch
         # fixed cost (state-store harness, claim joins, sink merges)

@@ -163,6 +163,7 @@ def cmd_vector_index(args) -> int:
 
 def cmd_statscalc(args) -> int:
     from dataflow_opinion_analysis_spark.plans import stats
+    from dataflow_opinion_analysis_spark.session import materialize
 
     spark = _spark(args)
     document = spark.read.parquet(f"{args.warehouse}/document")
@@ -175,7 +176,7 @@ def cmd_statscalc(args) -> int:
         # rewrites <warehouse>/wrsocialcount, which may BE this input path
         # (the socialstats -> statscalc composition) — overwriting a path
         # Spark is lazily reading from corrupts the read
-        social = spark.read.parquet(args.social_counts).localCheckpoint(eager=True)
+        social = materialize(spark.read.parquet(args.social_counts), "shared")
     # durable chaining: each table is written to the warehouse and the
     # read-back feeds the next table (reference per-table BigQuery writes)
     for name in stats.build_stats(
@@ -196,6 +197,7 @@ def cmd_socialstats(args) -> int:
     from dataflow_opinion_analysis_spark.operators.events_ops import (
         social_counts_from_jdbc,
     )
+    from dataflow_opinion_analysis_spark.session import materialize
     from dataflow_opinion_analysis_spark.sources.files import (
         build_jdbc_social_stats_query,
         read_jdbc,
@@ -211,7 +213,7 @@ def cmd_socialstats(args) -> int:
         # the max-time filter reads the CURRENT table while we rewrite it:
         # pin the rows first (reference reads the cache via a separate
         # BigQuery query before writing, SocialStatsPipeline.java:112-122)
-        existing = existing.localCheckpoint(eager=True)
+        existing = materialize(existing, "shared")
     counts = social_counts_from_jdbc(raw, existing)
     mode = "overwrite" if args.truncate or existing is None else "append"
     counts.write.mode(mode).parquet(out_path)
@@ -231,12 +233,13 @@ def cmd_statsrefresh(args) -> int:
         IncrementalStatsConsumer,
     )
     from dataflow_opinion_analysis_spark.streaming.pipeline import IndexerSinks
+    from dataflow_opinion_analysis_spark.session import materialize
 
     spark = _spark(args)
     sinks = IndexerSinks.create(spark, args.output)
     social = None
     if args.social_counts:
-        social = spark.read.parquet(args.social_counts).localCheckpoint(eager=True)
+        social = materialize(spark.read.parquet(args.social_counts), "shared")
     consumer = IncrementalStatsConsumer(
         spark, args.store_root, sinks.document, sinks.sentiment,
         sinks.webresource, social_counts=social,

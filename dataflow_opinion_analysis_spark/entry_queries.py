@@ -16,6 +16,7 @@ from dataflow_opinion_analysis_spark import oracles, oracles_stats
 from dataflow_opinion_analysis_spark.functions import lexicon
 from dataflow_opinion_analysis_spark.plans import stats
 from dataflow_opinion_analysis_spark.plans.indexer import build_indexer
+from dataflow_opinion_analysis_spark.session import materialize
 from dataflow_opinion_analysis_spark.sources.transcripts import derive_transcripts
 
 
@@ -201,8 +202,8 @@ def q_stats_stattopic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
                     assume_unique=True,
                 )
                 consumer.refresh()
-            return spark.read.parquet(f"{tmp}/stats/stattopic").localCheckpoint(
-                eager=True
+            return materialize(
+                spark.read.parquet(f"{tmp}/stats/stattopic"), "shared"
             )
 
         _memoize_build(spark, key, build)

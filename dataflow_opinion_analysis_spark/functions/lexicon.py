@@ -86,9 +86,3 @@ TAG_STOPWORDS = [
 
 TAG_MIN_LEN = 4
 TAG_TOP_K = 10
-
-
-def duckdb_lexicon_values(dims: list[str] | None = None) -> str:
-    """Inline VALUES list `(word, dim)` for DuckDB oracle SQL."""
-    pairs = [p for p in LEXICON_PAIRS if dims is None or p[1] in dims]
-    return ", ".join(f"('{w}', '{d}')" for w, d in pairs)

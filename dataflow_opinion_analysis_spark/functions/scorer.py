@@ -9,10 +9,10 @@ batches (north_star: "never per-row Python").
 
 Two entry points, both ``mapInPandas`` stages:
 
-- ``score_passages(df)``   1 document -> N sentiment-passage rows
+- ``score_passages_carry(df, carry)``  1 document -> N sentiment-passage rows
   (the reference's ``GetSentiments`` fan-out, ``IndexerPipeline.java:1398-1450``)
-- ``extract_tags(df)``     1 document -> 1 row with Tags array
-  (top-K frequent non-stopword tokens; reference tags come from Sirocco)
+- ``tags_augment(df)``                 1 document -> the same row plus a Tags
+  array (top-K frequent non-stopword tokens; reference tags come from Sirocco)
 
 Determinism contract: scores are pure functions of the text (see
 ``functions/lexicon.py``), so goldens and the DuckDB oracle reproduce them
@@ -127,11 +127,6 @@ def _passage_columns() -> list[str]:
     )
 
 
-def score_passages_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield _score_batch(pdf)
-
-
 def _tag_lists(texts: pd.Series) -> pd.Series:
     """Per-row top-K tag tuples (Tag, Weight, GoodAsTopic) for a text
     Series — all C-level groupby/sort ops, aligned with ``texts.index``."""
@@ -156,17 +151,6 @@ def _tag_lists(texts: pd.Series) -> pd.Series:
     return pd.Series(
         [v if isinstance(v, list) else [] for v in mapped], index=texts.index
     )
-
-
-def _tags_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pd.DataFrame({"document_hash": pdf["document_hash"]})
-    out["Tags"] = _tag_lists(pdf["text"])
-    return out
-
-
-def extract_tags_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield _tags_batch(pdf)
 
 
 # ---------------------------------------------------------------------------
@@ -209,8 +193,8 @@ def _index_or_raise(texts: pd.Series) -> pd.Series:
 
 def tags_augment(df, strict: bool = False):
     """winners frame (must carry ``text``) -> same frame + ``Tags`` +
-    ``tag_names`` columns, computed in one narrow Arrow pass (the fused
-    replacement for extract_tags + join-back).
+    ``tag_names`` columns, computed in one narrow Arrow pass (no
+    join-back).
 
     ``strict=True`` adds an ``_index_error`` column: the NLP stage raises
     IndexingError on unparseable (poison) documents; the per-sub-batch

@@ -56,12 +56,3 @@ def date_id(ts: Column) -> Column:
 def duckdb_hash_sql(*exprs: str) -> str:
     joined = f" || chr(31) || ".join(f"coalesce({e}, '')" for e in exprs)
     return f"sha256({joined})"
-
-
-def duckdb_wr_hash_sql(ts_expr: str, url_expr: str) -> str:
-    millis = f"cast(cast(epoch({ts_expr}) as double) * 1000 as bigint)"
-    return duckdb_hash_sql(f"cast({millis} as varchar)", url_expr)
-
-
-def duckdb_date_id_sql(ts_expr: str) -> str:
-    return f"cast(strftime({ts_expr}, '%Y%m%d') as int)"

@@ -15,7 +15,7 @@ the worst case for naive min-label propagation, which needs
 O(diameter) rounds — collapse exponentially fast because large-star
 rewires every node above the local minimum directly to it.
 
-Each round's output is localCheckpoint'ed (narrow 2-column longs):
+Each round's output is checkpointed (narrow 2-column longs):
 iterative DataFrame algorithms must truncate lineage or the plan
 doubles per round (same fit-then-serve barrier the IVF trainer uses —
 operators/similarity.py). On a cluster the checkpoint becomes a
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataflow_opinion_analysis_spark.operators import dataprep
+from dataflow_opinion_analysis_spark.session import materialize
 
 
 def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
@@ -88,10 +89,10 @@ def connected_components(
     O(log^2 n) rounds in theory, 2-5 in practice; the loop raises if
     the bound is hit so a silent wrong answer is impossible."""
     cur = edges.select(F.col(a).cast("long").alias("a"), F.col(b).cast("long").alias("b"))
-    cur = cur.where(F.col("a") != F.col("b")).localCheckpoint(eager=True)
+    cur = materialize(cur.where(F.col("a") != F.col("b")), "shared")
     prev = _edge_checksum(cur)
     for _ in range(max_rounds):
-        nxt = small_star(large_star(cur)).localCheckpoint(eager=True)
+        nxt = materialize(small_star(large_star(cur)), "shared")
         chk = _edge_checksum(nxt)
         cur = nxt
         if chk == prev:
@@ -158,7 +159,7 @@ def pagerank_impact(
     rounds, one equi-join of edges with the current ranks, one hash agg
     of integer contributions, one left join back onto the node set —
     every wide op keyed on node id, nothing collected. Each round is
-    localCheckpoint'ed (narrow 2-column frame) so the plan does not
+    checkpointed (narrow 2-column frame) so the plan does not
     double per iteration — the same barrier discipline as
     connected_components above. At 100 TB: edges and ranks co-partition
     on the node key; an iteration is two shuffles of the (node, long)
@@ -167,13 +168,13 @@ def pagerank_impact(
     # every iteration's left join (and its upstream is typically a
     # DISTINCT over a wide frame — re-planned and re-shuffled per round
     # without the barrier), edges in every contribution join
-    nodes = nodes.localCheckpoint(eager=True)
-    edges = edges.localCheckpoint(eager=True)
+    nodes = materialize(nodes, "shared")
+    edges = materialize(edges, "shared")
     # edges x outdeg is loop-invariant: join it ONCE and checkpoint, so
     # each iteration pays a single join (ranks) instead of two
-    edges_deg = edges.join(
+    edges_deg = materialize(edges.join(
         edges.groupBy("src").agg(F.count("*").alias("outdeg")), "src"
-    ).localCheckpoint(eager=True)
+    ), "shared")
     r = nodes.select("node", F.lit(1_000_000).cast("long").alias("rank_micro"))
     for _ in range(iters):
         contrib = (
@@ -191,5 +192,5 @@ def pagerank_impact(
             .cast("long")
             .alias("rank_micro"),
         )
-        r = r.localCheckpoint(eager=True)
+        r = materialize(r, "shared")
     return r

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataflow_opinion_analysis_spark.session import scratch_checkpoint
+from dataflow_opinion_analysis_spark.session import materialize
 
 TOKEN_RE = "[a-z0-9']+"
 SHINGLE_N = 3
@@ -97,30 +97,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(dedup_exact_sql_spark())
 
 
-def _shingle_cte_spark(rel: str = "documents") -> str:
-    # raw_shingles -> DF-capped shingles: the cap drops skew-inducing hot
-    # shingles consistently from BOTH the pair join and the Jaccard sizes,
-    # so similarity stays internally consistent (and oracle-identical).
-    return f"""
-toks AS (
-  SELECT doc_id, {SPARK_TOKENS} AS toks FROM {rel}
-),
-raw_shingles AS (
-  SELECT DISTINCT doc_id, shingle
-  FROM (SELECT doc_id, explode({SPARK_SHINGLES}) AS shingle FROM toks)
-  WHERE shingle <> ''
-),
-rare AS (
-  SELECT shingle FROM raw_shingles GROUP BY shingle
-  HAVING count(*) <= {MAX_SHINGLE_DF}
-),
-shingles AS (
-  SELECT s.doc_id, s.shingle FROM raw_shingles s JOIN rare r ON r.shingle = s.shingle
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id)
-"""
-
-
 def _shingle_views(spark: SparkSession, prefix: str, rel: str = "documents") -> None:
     """Stage the DF-capped shingle relation over ``rel`` ONCE, in
     ARRAY-PER-DOC form, and register ``{prefix}_arrs`` (doc_id, sh array,
@@ -153,7 +129,7 @@ FROM (SELECT /*+ REPARTITION({width}) */ doc_id, {SPARK_TOKENS} AS toks
       FROM {rel})
 """
     )
-    arrs = scratch_checkpoint(arrs)
+    arrs = materialize(arrs, "scratch")
     arrs.createOrReplaceTempView(f"{prefix}_doc_arrs")
     capped = spark.sql(
         f"""
@@ -171,7 +147,7 @@ FROM {prefix}_doc_arrs
         "size(sh) AS n_sh",
         "transform(sh, s -> cast(conv(substr(sha2(s, 256), 1, 8), 16, 10) AS bigint)) AS h_arr",
     )
-    capped = scratch_checkpoint(capped)
+    capped = materialize(capped, "scratch")
     capped.createOrReplaceTempView(f"{prefix}_arrs")
     spark.sql(
         f"SELECT doc_id, explode(sh) AS shingle FROM {prefix}_arrs"
@@ -217,8 +193,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     band key) — no all-pairs anywhere, and the signature aggregate gets
     map-side partial combine for free.
 
-    The gate runs the SAME stages as dedup_minhash_sql_spark but
-    materializes shingles/sizes/bands once (see _shingle_views: the
+    Shingles/sizes/bands are materialized once (see _shingle_views: the
     all-in-one SQL re-expanded the shingle chain per CTE reference — 24
     corpus scans in the round-5 plan)."""
     _docs(spark, sf_dir)
@@ -246,12 +221,20 @@ def _minhash_sig_sql(prefix: str) -> str:
 
 
 def minhash_bands(spark: SparkSession, rel: str = "documents", prefix: str = "mhb") -> DataFrame:
-    """Staged twin of minhash_bands_sql_spark over ``rel``: identical
-    rows, but the shingle chain is materialized once (see
-    _shingle_views) and the signature is a per-row array fold instead of
-    a grouped aggregate (see _minhash_sig_sql)."""
+    """Long-form (doc_id, band, band_key) LSH bucket relation over
+    ``rel`` — the durable-store projection the incremental dataprep
+    pipeline persists per wave (operators/dataprep_incremental.py). The
+    shingle chain is materialized once (see _shingle_views) and the
+    signature is a per-row array fold (see _minhash_sig_sql). Band key
+    format matches the DuckDB mirror exactly: sorted "{i}:{mh}" pairs
+    joined by '_'."""
     _shingle_views(spark, prefix, rel)
-    _, band_structs = _minhash_parts()
+    band_structs = ", ".join(
+        "named_struct('band', {b}, 'band_key', concat_ws('_', sort_array(array("
+        "concat('{i0}:', cast(mh{i0} AS string)), "
+        "concat('{i1}:', cast(mh{i1} AS string))))))".format(b=b, i0=2 * b, i1=2 * b + 1)
+        for b in range(LSH_BANDS)
+    )
     return spark.sql(
         f"""
 WITH sig AS (
@@ -265,24 +248,12 @@ LATERAL VIEW explode(array({band_structs})) t AS bb
 
 
 def minhash_pairs(spark: SparkSession, rel: str = "documents", prefix: str = "mh") -> DataFrame:
-    """Staged twin of dedup_minhash_sql_spark over ``rel``: identical
-    stage SQL and output rows, but shingles/sizes/bands are materialized
-    once (eager localCheckpoint) instead of re-expanding per CTE
-    reference. Shared by the gate, the composed/incremental dataprep
-    pipelines and cluster dedup."""
-    _shingle_views(spark, prefix, rel)
-    _, band_structs = _minhash_parts()
-    bands = spark.sql(
-        f"""
-WITH sig AS (
-{_minhash_sig_sql(prefix)}
-)
-SELECT doc_id, bb.band AS band, bb.band_key AS band_key
-FROM sig
-LATERAL VIEW explode(array({band_structs})) t AS bb
-"""
-    )
-    bands = scratch_checkpoint(bands)
+    """MinHash+LSH near-dup pairs (doc_a, doc_b, jaccard) over ``rel``:
+    band-key equi-join for candidates, exact-Jaccard verification.
+    Shingles/sizes/bands are materialized once instead of re-expanding
+    per CTE reference. Shared by the gate, the composed/incremental
+    dataprep pipelines and cluster dedup."""
+    bands = materialize(minhash_bands(spark, rel, prefix), "scratch")
     bands.createOrReplaceTempView(f"{prefix}_bands")
     # verification: candidate pairs attach the per-doc shingle ARRAYS and
     # intersect in-row — size(array_intersect(sh_a, sh_b)) over the
@@ -312,91 +283,6 @@ FROM j
 WHERE n_common / cast(na + nb - n_common AS double) >= {JACCARD_THRESHOLD}
 """
     )
-
-
-def _minhash_parts() -> tuple[str, str]:
-    """(mins, band_structs) SQL fragments shared by the pair query and the
-    long-form band relation. K permutation mins as one aggregate; band key
-    format matches the DuckDB mirror exactly: sorted "{i}:{mh}" pairs
-    joined by '_'."""
-    mins = ",\n         ".join(
-        f"min((h * {2 * i + 1} + {i * i + 7}) % {MINHASH_P}) AS mh{i}"
-        for i in range(MINHASH_K)
-    )
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'band_key', concat_ws('_', sort_array(array("
-        "concat('{i0}:', cast(mh{i0} AS string)), "
-        "concat('{i1}:', cast(mh{i1} AS string))))))".format(b=b, i0=2 * b, i1=2 * b + 1)
-        for b in range(LSH_BANDS)
-    )
-    return mins, band_structs
-
-
-def minhash_bands_sql_spark(rel: str = "documents") -> str:
-    """Long-form (doc_id, band, band_key) LSH bucket relation over ``rel``
-    — the durable-store projection the incremental dataprep pipeline
-    persists per wave (operators/dataprep_incremental.py)."""
-    mins, band_structs = _minhash_parts()
-    return f"""
-WITH {_shingle_cte_spark(rel)},
-hashed AS (
-  SELECT doc_id,
-         cast(conv(substr(sha2(shingle, 256), 1, 8), 16, 10) AS bigint) AS h
-  FROM shingles
-),
-sig AS (
-  SELECT doc_id,
-         {mins}
-  FROM hashed
-  GROUP BY doc_id
-)
-SELECT doc_id, bb.band AS band, bb.band_key AS band_key
-FROM sig
-LATERAL VIEW explode(array({band_structs})) t AS bb
-"""
-
-
-def dedup_minhash_sql_spark(rel: str = "documents") -> str:
-    """MinHash+LSH near-dup-pairs SQL over relation ``rel`` (parameterized
-    for the composed dataprep pipeline)."""
-    mins, band_structs = _minhash_parts()
-    return f"""
-WITH {_shingle_cte_spark(rel)},
-hashed AS (
-  SELECT doc_id,
-         cast(conv(substr(sha2(shingle, 256), 1, 8), 16, 10) AS bigint) AS h
-  FROM shingles
-),
-sig AS (
-  SELECT doc_id,
-         {mins}
-  FROM hashed
-  GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, bb.band AS band, bb.band_key AS band_key
-  FROM sig
-  LATERAL VIEW explode(array({band_structs})) t AS bb
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-common AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_common
-  FROM cand c
-  JOIN shingles a ON a.doc_id = c.doc_a
-  JOIN shingles b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT c.doc_a, c.doc_b,
-  round(c.n_common / cast(sa.n_sh + sb.n_sh - c.n_common AS double), 6) AS jaccard
-FROM common c
-JOIN sizes sa ON sa.doc_id = c.doc_a
-JOIN sizes sb ON sb.doc_id = c.doc_b
-WHERE c.n_common / cast(sa.n_sh + sb.n_sh - c.n_common AS double) >= {JACCARD_THRESHOLD}
-"""
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,7 +593,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; corpus size and avgdl are scalar subqueries (no 1-row
     cross join, no BroadcastNestedLoopJoin).
 
-    tf is MATERIALIZED once (eager localCheckpoint): df/dl/qterms/hits
+    tf is MATERIALIZED once (session.materialize): df/dl/qterms/hits
     all read it, and Catalyst's per-reference CTE inlining re-ran the
     tokenize+explode+agg chain (with the corpus scan under it) four
     times in the round-5 plan. Same stage SQL, same rows; the one-file
@@ -722,7 +608,7 @@ FROM (SELECT doc_id, explode({SPARK_TOKENS}) AS token
 GROUP BY doc_id, token
 """
     )
-    tf = scratch_checkpoint(tf)
+    tf = materialize(tf, "scratch")
     tf.createOrReplaceTempView("bm25_tf")
     n_sq = "(SELECT CAST(count(*) AS BIGINT) FROM documents)"
     avgdl_sq = "(SELECT CAST(sum(dl) AS DOUBLE) / count(*) FROM dl)"
@@ -876,7 +762,7 @@ FROM (SELECT /*+ REPARTITION({width}) */ doc_id,
              concat(' ', array_join({SPARK_TOKENS}, '  '), ' ') AS s
       FROM documents)"""
     )
-    state = scratch_checkpoint(state)
+    state = materialize(state, "scratch")
 
     pairs_expr = (
         "CASE WHEN size(t) >= 2 THEN "
@@ -891,15 +777,21 @@ FROM (SELECT /*+ REPARTITION({width}) */ doc_id,
             f"""SELECT pair, cast(count(*) AS bigint) AS c
 FROM (SELECT explode({pairs_expr}) AS pair FROM bpe_state)
 GROUP BY pair ORDER BY c DESC, pair ASC LIMIT 1"""
-        ).collect()[0]
-        pair, cnt = str(top.pair), int(top.c)
+        ).collect()
+        if not top:
+            # no adjacent pair left (e.g. an empty corpus): merging a NULL
+            # pair nulls every document string, so this round and every
+            # later one has no pair, NULL tokens and 0 distinct tokens
+            rows += [(r, None, None, None, 0) for r in range(rnd, BPE_ROUNDS + 1)]
+            break
+        pair, cnt = str(top[0].pair), int(top[0].c)
         lit = pair.replace("'", "''")
         pat = " " + lit.replace(" ", "  ") + " "
         rep = " " + lit.replace(" ", "_") + " "
-        state = scratch_checkpoint(spark.sql(
+        state = materialize(spark.sql(
             f"""SELECT doc_id, s, split(trim(s), '  ') AS t
 FROM (SELECT doc_id, regexp_replace(s, '{pat}', '{rep}') AS s FROM bpe_state)"""
-        ))
+        ), "scratch")
         state.createOrReplaceTempView("bpe_state")
         # two-level: count + count(DISTINCT) in one aggregate planned an
         # Expand doubling the exploded token rows; the per-token partial

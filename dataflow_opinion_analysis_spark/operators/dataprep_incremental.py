@@ -49,6 +49,7 @@ from dataflow_opinion_analysis_spark.operators.dataprep_pipeline import (
     _exact_keep_sql_spark,
     _filter_sql_spark,
 )
+from dataflow_opinion_analysis_spark.session import materialize
 from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -123,13 +124,13 @@ class IncrementalDataPrep:
         delta = self.docs.incremental_read(since, to_version=current_version)
         if delta is None or not delta.head(1):
             return {"new_docs": 0, "packed": 0, "cursor": cur}
-        delta = delta.localCheckpoint(eager=True)
+        delta = materialize(delta, "shared")
         n_new = delta.count()
 
         # 1. quality/language filter (stateless)
         delta.createOrReplaceTempView("dpi_delta")
-        filtered = self.spark.sql(
-            _filter_sql_spark("dpi_delta")).localCheckpoint(eager=True)
+        filtered = materialize(
+            self.spark.sql(_filter_sql_spark("dpi_delta")), "shared")
 
         # 2. exact dedup: in-wave canonical, then the first-claim store
         filtered.createOrReplaceTempView("dpi_filtered")
@@ -153,16 +154,17 @@ class IncrementalDataPrep:
         self.norm_hashes.merge(
             exact_w.select("norm_hash", "doc_id"), wave_id)
         own_claims = self.norm_hashes.read().select("norm_hash", "doc_id")
-        exact = exact_w.join(own_claims, ["norm_hash", "doc_id"], "left_semi") \
-            .localCheckpoint(eager=True)
+        exact = materialize(
+            exact_w.join(own_claims, ["norm_hash", "doc_id"], "left_semi"),
+            "shared")
 
         # 3. near-dedup: in-wave pairs + cross-wave via the band store.
         #    Read prior bands BEFORE inserting this wave's (a doc must not
         #    collide with itself through the store).
         exact.createOrReplaceTempView("dpi_exact")
-        new_bands = dataprep.minhash_bands(
-            self.spark, "dpi_exact", "dpi_bands"
-        ).localCheckpoint(eager=True)
+        new_bands = materialize(
+            dataprep.minhash_bands(self.spark, "dpi_exact", "dpi_bands"),
+            "shared")
         prior_bands = self.bands.read()
         old_candidates = (
             prior_bands.join(
@@ -187,7 +189,7 @@ class IncrementalDataPrep:
         losers = pairs.join(
             exact.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
         ).select(F.col("doc_b").alias("doc_id")).distinct()
-        kept = exact.join(losers, "doc_id", "left_anti").localCheckpoint(eager=True)
+        kept = materialize(exact.join(losers, "doc_id", "left_anti"), "shared")
         self.bands.merge(new_bands, wave_id)
 
         # 4. PII scrub (stateless, 1:1)
@@ -209,7 +211,7 @@ class IncrementalDataPrep:
         )
         # integer `div` (not FP division) — chunk ids must stay exact past
         # 2^53 total tokens
-        shifted = wave_pack.selectExpr(
+        shifted = materialize(wave_pack.selectExpr(
             "doc_id",
             "lang",
             "n_tokens",
@@ -222,7 +224,7 @@ class IncrementalDataPrep:
         ).select(
             "doc_id", "lang", "n_tokens", "start_offset",
             "first_chunk", "last_chunk", "n_chunks", "scrubbed_hash",
-        ).localCheckpoint(eager=True)
+        ), "shared")
 
         n_packed = self.packed.merge(shifted, wave_id, assume_new=True)
         wave_tokens = shifted.agg(F.sum("n_tokens")).collect()[0][0] or 0

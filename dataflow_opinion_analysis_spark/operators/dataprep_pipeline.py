@@ -33,7 +33,7 @@ benchmark decontamination against a caller-supplied eval suite.
 
 Scale shape: every stage's plan is the already-audited per-operator
 plan (equi-join banding, hash aggregates, two-phase prefix sum), and
-stages are separated by eager localCheckpoint barriers so Catalyst
+stages are separated by eager checkpoint barriers so Catalyst
 cannot re-expand an upstream stage once per downstream reference (the
 round-4 sigs-CTE lesson). At 100 TB the barriers become durable
 parquet/MergeTable hand-offs; the composition and per-stage plans are
@@ -47,6 +47,7 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataflow_opinion_analysis_spark import session
 from dataflow_opinion_analysis_spark.operators import dataprep, llmprep
 
 PIPELINE_LANG = "en"
@@ -129,7 +130,7 @@ def build_dataprep(
     extended composition."""
 
     def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if materialize else df
+        return session.materialize(df, "shared") if materialize else df
 
     docs.createOrReplaceTempView("dp_input")
     quality = filtered = _ckpt(spark.sql(_filter_sql_spark("dp_input")))

@@ -26,8 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from dataflow_opinion_analysis_spark.operators import hints
-
 
 def exact_dedupe_ranked(input_content: DataFrame) -> DataFrame:
     """D1 core: rank rows within each content_hash group. One shuffle;
@@ -209,10 +207,11 @@ def soft_dedupe(indexed_with_tags: DataFrame) -> DataFrame:
         F.coalesce("grp_n", F.lit(1)).alias("grp_n"),
         F.size(F.coalesce("tag_names", F.array())).alias("n_tags"),
     )
-    # hits is document-count-sized in tag-overlapping corpora — joinable
-    # strategy governed by operators/hints.py (freq/grp_n/winners_per_group
-    # above are per-group / repeated-tag sized, genuinely small)
-    dm = base.join(hits.transform(hints.big), "document_hash", "left").withColumn(
+    # hits is document-count-sized in tag-overlapping corpora; AQE picks
+    # its join strategy (a forced shuffle_hash measured 259s vs 82s for the
+    # full pipeline on 2M turns at local[32]). freq/grp_n/winners_per_group
+    # above are per-group / repeated-tag sized, genuinely small
+    dm = base.join(hits, "document_hash", "left").withColumn(
         "n_freq", F.coalesce("n_freq", F.lit(0))
     ).withColumn(
         "is_match",

@@ -1,34 +1,8 @@
-"""Join-strategy control for document-count-sized relations.
-
-Every indexer join whose build side scales with document count routes
-through ``big()`` so the strategy is controllable in one place via
-``SPARK_GRAFT_BIG_JOIN_HINT``:
-
-- default (unset/''): NO hint — AQE picks. Measured A/B on 2M turns
-  (paired, interleaved, quiet host): AQE runtime-converts these joins to
-  broadcast and wins decisively in local mode — full pipeline 82s vs 259s
-  with forced shuffle_hash at local[32] — because the broadcast build of
-  the narrow side is one shared in-memory copy while the WIDE probe side
-  (rows carrying the text column) streams with NO exchange; forcing a
-  shuffled join re-shuffles the wide side through the single local shuffle
-  medium several times over.
-- 'shuffle_hash' / 'merge': pin the strategy. On a REAL multi-executor
-  cluster at fact scale the same build sides are GBs-TBs and must never
-  broadcast; there AQE's size estimates exceed the threshold on their own,
-  but operators can pin the strategy explicitly if an estimate goes wrong
-  (the classic mitigation for driver OOM on runaway broadcasts).
-"""
+"""Skew control for rank windows over hot keys."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-
-
-def big(df: DataFrame) -> DataFrame:
-    h = os.environ.get("SPARK_GRAFT_BIG_JOIN_HINT", "")
-    return df.hint(h) if h else df
 
 
 def salted_top_k(

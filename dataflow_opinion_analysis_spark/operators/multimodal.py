@@ -49,18 +49,6 @@ def with_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fake_decode_image(payload: bytes) -> tuple[int, int, int]:
-    """STUB decoder — deterministic fake dimensions from the byte length.
-
-    A real implementation would do:
-        raise NotImplementedError("install pillow/av for real decode")
-    then decode to numpy and measure. The arithmetic fake keeps the
-    pipeline testable offline.
-    """
-    n = len(payload)
-    return (n % 640 + 1, (n * 7) % 480 + 1, n % 30 + 1)
-
-
 def decode_metadata_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas stage: whole Arrow batches of binary payloads in, typed
     metadata out. Vectorized where possible (lengths, hashes via pandas

@@ -8,18 +8,13 @@ Two paths:
   signs -> bucket key -> candidates only within bucket. At 100 TB the
   bucket key is the shuffle/join key; brute force only runs inside a
   bucket.
-
-A vectorized pandas/Arrow variant (numpy matmul per batch) is provided
-for throughput comparisons in bench; the SQL variant is the oracle-gated
-one because its FP summation order is deterministic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from dataflow_opinion_analysis_spark.session import materialize
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -79,7 +74,7 @@ def _emb_v(spark: SparkSession, sf_dir: str) -> None:
         width = spark.sparkContext.defaultParallelism
         if base.rdd.getNumPartitions() < width:
             base = base.repartition(width)
-        _V_CACHE[key] = base.localCheckpoint(eager=True)
+        _V_CACHE[key] = materialize(base, "shared")
     _V_CACHE[key].createOrReplaceTempView("emb_v")
 
 
@@ -173,53 +168,6 @@ FROM ranked WHERE rk <= {ANN_TOP_K}
     )
 
 
-# ---------------------------------------------------------------------------
-# vectorized Arrow path (bench / scale comparison, not oracle-gated)
-# ---------------------------------------------------------------------------
-
-def topk_matmul_map(query_matrix, query_ids, k: int = TOP_K):
-    """Build a mapInPandas fn: per Arrow batch, numpy matmul against the
-    broadcast query matrix, emit (query_id, neighbor_id, cosine)."""
-    import numpy as np
-
-    qn = query_matrix / np.linalg.norm(query_matrix, axis=1, keepdims=True)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = qn @ mn.T  # (n_queries, batch)
-            qi, bi = np.nonzero(np.ones_like(sims))
-            yield pd.DataFrame(
-                {
-                    "query_id": query_ids[qi],
-                    "neighbor_id": pdf["vec_id"].to_numpy()[bi],
-                    "cosine": sims[qi, bi],
-                }
-            )
-
-    return fn
-
-
-def similarity_topk_arrow(spark: SparkSession, sf_dir: str, k: int = TOP_K) -> DataFrame:
-    """The Arrow/numpy brute-force path: broadcast query matrix, per-batch
-    matmul, then a global top-k window. Used by bench for throughput."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window as W
-
-    emb = _emb(spark, sf_dir)
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    qm = np.stack([np.array(r.embedding) for r in qrows]).astype("float64")
-    qids = np.array([r.vec_id for r in qrows])
-    sims = emb.mapInPandas(
-        topk_matmul_map(qm, qids, k),
-        "query_id long, neighbor_id long, cosine double",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return sims.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
-
-
 # the perturbed-twin expression, Spark dialect: component d of vec_id's
 # twin is x + EPS * uniform_hash(vec_id, d) with uniform_hash in
 # [-0.5, 0.5) — transform's (element, index) lambda gives d, vec_id is an
@@ -240,7 +188,7 @@ def _emb_dup_build(spark: SparkSession, sf_dir: str, n_bands: int) -> DataFrame:
     round-4 all-in-one-SQL shape re-ran the 64-plane signature projection
     (and the embeddings scan under it) once per band arm per self-join
     side — ~16 redundant table scans at 100 TB. Instead the two shared
-    relations are MATERIALIZED eagerly (localCheckpoint — the repo's
+    relations are MATERIALIZED eagerly (session.materialize — the repo's
     fit-then-serve pattern from IVF) before the self-join:
 
     1. ``aug``: embeddings + perturbed twins — the ONE scan of the table;
@@ -274,7 +222,7 @@ def _emb_dup_build(spark: SparkSession, sf_dir: str, n_bands: int) -> DataFrame:
     width = spark.sparkContext.defaultParallelism
     if base.rdd.getNumPartitions() < width:
         base = base.repartition(width)
-    base = base.localCheckpoint(eager=True)
+    base = materialize(base, "shared")
     base_view = f"emb_base_{n_bands}"
     aug_view = f"emb_aug_{n_bands}"
     bands_view = f"emb_bands_{n_bands}"
@@ -284,7 +232,7 @@ def _emb_dup_build(spark: SparkSession, sf_dir: str, n_bands: int) -> DataFrame:
     # join used to re-run the 64-dim norm fold twice per CANDIDATE PAIR —
     # 2/3 of that stage's interpreted-HOF work at sf1.0 — where one norm
     # per vector is enough. Same double value, same fold order.
-    aug = spark.sql(
+    aug = materialize(spark.sql(
         f"""
 SELECT vec_id, v, {_norm_unrolled('v')} AS nrm FROM (
   SELECT vec_id, v FROM {base_view}
@@ -293,11 +241,11 @@ SELECT vec_id, v, {_norm_unrolled('v')} AS nrm FROM (
   FROM {base_view} WHERE vec_id % {COSINE_DUP_EVERY} = 3
 )
 """
-    ).localCheckpoint(eager=True)
+    ), "shared")
     aug.createOrReplaceTempView(aug_view)
     # the expensive dot-products-per-row signature pass runs ONCE and is
     # checkpointed before the self-join references it twice
-    bands = spark.sql(
+    bands = materialize(spark.sql(
         f"""
 WITH planes AS (
   SELECT transform(sequence(0, {nb - 1}),
@@ -316,7 +264,7 @@ sigs AS (
 SELECT vec_id, band, bucket
 FROM sigs LATERAL VIEW posexplode(buckets) t AS band, bucket
 """
-    ).localCheckpoint(eager=True)
+    ), "shared")
     bands.createOrReplaceTempView(bands_view)
     # The bucket self-join emits candidates from a few-MB banded relation:
     # pin its exchanges at shuffle width (scale-adaptive, from the session

@@ -23,10 +23,8 @@ Plan shape (what .explain should show):
 The only exchanges in the whole DAG touch either narrow projections or
 happen exactly once on the wide rows (conv_id, content_hash).
 
-Driver-time note: persisted stages are EAGER localCheckpoints (_pin) —
-without lineage truncation, AQE re-optimizes the full deep DAG at every
-stage boundary and instrumentation showed 37% of job wall as driver-idle
-planning gaps.
+With ``persist=True`` the stages are materialized as the "shared" role
+of session.materialize, which truncates the deep DAG's lineage.
 """
 
 from __future__ import annotations
@@ -38,30 +36,7 @@ from pyspark.sql import functions as F
 
 from dataflow_opinion_analysis_spark.functions import scorer
 from dataflow_opinion_analysis_spark.operators import dedupe, fanout, ingest
-
-
-def _pin(df: DataFrame, persist: bool) -> DataFrame:
-    """Eager localCheckpoint where the old code persisted: holds the data
-    like persist() AND truncates the logical plan. Instrumentation showed
-    37% of the job wall was driver-idle time — AQE re-optimizes the plan
-    at every shuffle-stage boundary, and on the deep un-truncated indexer
-    DAG that re-planning (plus broadcast planning) serializes the job
-    between stages. Checkpointed leaves make every downstream plan
-    shallow, the same fix plans/stats.py applies to the chained stats
-    views.
-
-    Storage level default MEMORY_AND_DISK (deserialized): A/B-measured
-    against MEMORY_AND_DISK_SER on the 2M-turn scaling input — override
-    via SPARK_GRAFT_CKPT_LEVEL to re-measure."""
-    if not persist:
-        return df
-    import os
-
-    from pyspark.storagelevel import StorageLevel
-
-    name = os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "")
-    level = getattr(StorageLevel, name) if name else None
-    return df.localCheckpoint(eager=True, storageLevel=level)
+from dataflow_opinion_analysis_spark.session import materialize
 
 
 @dataclass
@@ -111,28 +86,23 @@ def build_indexer_from_input_content(
     batch / 1.0 streaming (IndexerPipelineUtils.java:395-398); this repo
     defaults to 0.0 so the enrichment-free goldens stay byte-stable —
     pass the reference value explicitly (cli.py exposes --enrich-ratio)."""
-    import os as _os
-
     to_index, skipped = ingest.split_skip_indexing(ic)
     # ONE checkpoint of the ranked frame serves both the winners chain and
-    # the exact-dupes webresource branch (no second scan + window).
-    # SPARK_GRAFT_NO_RANKED_CKPT=1 skips it — A/B on the 2M-turn scaling
-    # input measured the skip WORSE (49.3s vs 37.6s steady at local[8]):
-    # re-running the scan+hash+window chain for the dupes branch costs
-    # more than the one full-corpus block write+read. Keep the ckpt.
-    ranked = _pin(
-        dedupe.exact_dedupe_ranked(to_index),
-        persist and not _os.environ.get("SPARK_GRAFT_NO_RANKED_CKPT"),
-    )
+    # the exact-dupes webresource branch (no second scan + window). Without
+    # it, an A/B on a 2M-turn input at local[8] measured 49.3s vs 37.6s.
+    ranked = dedupe.exact_dedupe_ranked(to_index)
+    if persist:
+        ranked = materialize(ranked, "shared")
     winners = ranked.filter(F.col("_rn") == 1).drop("_rn", "winner_document_hash")
     exact_dupes = ranked.filter(F.col("_rn") > 1).drop("_rn")
 
     # FUSED tag stage: one narrow Arrow pass appends (Tags, tag_names) to
     # the full winners frame — no token shuffles, no doc-sized join-back.
-    # tags_sql.extract_tags remains the Catalyst reference implementation
-    # (tests assert equivalence); the Arrow pass measured 0.89 scaling
-    # efficiency 2->8 cores vs 0.57 for the 3-shuffle SQL pipeline.
-    winners = _pin(scorer.tags_augment(winners, strict=strict_scoring), persist)
+    # The Arrow pass measured 0.89 scaling efficiency 2->8 cores vs 0.57
+    # for the 3-shuffle SQL pipeline it replaced.
+    winners = scorer.tags_augment(winners, strict=strict_scoring)
+    if persist:
+        winners = materialize(winners, "shared")
 
     dead_letter = None
     if strict_scoring:
@@ -179,7 +149,8 @@ def build_indexer_from_input_content(
             "is_dupe", "winner_document_hash"
         )
         soft_dupes = routed.filter(F.col("is_dupe")).drop("is_dupe")
-        soft_winners = _pin(soft_winners, persist)
+        if persist:
+            soft_winners = materialize(soft_winners, "shared")
     else:
         soft_winners = winners
         soft_dupes = None
@@ -190,14 +161,13 @@ def build_indexer_from_input_content(
         # tags to the Tags array of a hash-chosen enrich_ratio fraction
         from dataflow_opinion_analysis_spark.functions import entities
 
-        soft_winners = _pin(
-            entities.enrich_with_entities(
-                soft_winners,
-                b_ratio=enrich_ratio,
-                hash_col="expected_document_hash",
-            ),
-            persist,
+        soft_winners = entities.enrich_with_entities(
+            soft_winners,
+            b_ratio=enrich_ratio,
+            hash_col="expected_document_hash",
         )
+        if persist:
+            soft_winners = materialize(soft_winners, "shared")
 
     document = fanout.document_rows(soft_winners)
     # fused Arrow fan-out carries the doc key fields onto each passage row

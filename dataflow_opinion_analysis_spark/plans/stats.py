@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from dataflow_opinion_analysis_spark.schemas import ST_COLUMNS
+from dataflow_opinion_analysis_spark.session import materialize
 
 # window widths (reference constants)
 IMPACT_WINDOW_DAYS = 8     # statstoryimpact p2 INTERVAL 8 DAY
@@ -179,9 +180,7 @@ SentimentTags AS (
 def stattopic_df(spark, p_sql: str = P_ALL_DAYS_SQL):
     """Staged twin of ``spark.sql(stattopic_sql(p_sql))`` — identical
     rows; SentimentTags computed once."""
-    from dataflow_opinion_analysis_spark.session import scratch_checkpoint
-
-    head = scratch_checkpoint(spark.sql(_stattopic_head_sql(p_sql)))
+    head = materialize(spark.sql(_stattopic_head_sql(p_sql)), "scratch")
     head.createOrReplaceTempView("_stattopic_st")
     return spark.sql(f"WITH {_stattopic_tail_sql('_stattopic_st')}")
 
@@ -292,9 +291,7 @@ s1 AS (SELECT s1x.* FROM s1x JOIN p ON p.SnapshotDateId = s1x.SnapshotDateId),
 def statstoryimpact_df(spark, p_sql: str = P_ALL_DAYS_SQL):
     """Staged twin of ``spark.sql(statstoryimpact_sql(p_sql))`` —
     identical rows; s1 computed once."""
-    from dataflow_opinion_analysis_spark.session import scratch_checkpoint
-
-    head = scratch_checkpoint(spark.sql(_statstoryimpact_head_sql(p_sql)))
+    head = materialize(spark.sql(_statstoryimpact_head_sql(p_sql)), "scratch")
     head.createOrReplaceTempView("_statstoryimpact_s1")
     return spark.sql(f"WITH {_statstoryimpact_tail_sql('_statstoryimpact_s1')}")
 
@@ -358,9 +355,7 @@ s3 AS (
 def statdomainopinions_df(spark, min_docs: int = MIN_DOMAIN_DOCS, min_basic8: float = MIN_BASIC8):
     """Staged twin of ``spark.sql(statdomainopinions_sql(...))`` —
     identical rows; the s1/s1a/s2/s3 chain runs once."""
-    from dataflow_opinion_analysis_spark.session import scratch_checkpoint
-
-    head = scratch_checkpoint(spark.sql(_sdo_head_sql(min_docs)))
+    head = materialize(spark.sql(_sdo_head_sql(min_docs)), "scratch")
     head.createOrReplaceTempView("_sdo_s3")
     return spark.sql(f"WITH {_sdo_tail_sql('_sdo_s3', min_basic8)}")
 
@@ -504,9 +499,7 @@ WITH s1 AS (
 def statstoryrank_df(spark, lookback_days: int = STORYRANK_LOOKBACK):
     """Staged twin of ``spark.sql(statstoryrank_sql())`` — identical
     rows; s1 computed once."""
-    from dataflow_opinion_analysis_spark.session import scratch_checkpoint
-
-    head = scratch_checkpoint(spark.sql(_storyrank_head_sql(lookback_days)))
+    head = materialize(spark.sql(_storyrank_head_sql(lookback_days)), "scratch")
     head.createOrReplaceTempView("_storyrank_s1")
     return spark.sql(f"WITH {_storyrank_tail_sql('_storyrank_s1')}")
 
@@ -808,8 +801,9 @@ def build_stats(
     leaf relations. The fact views are checkpointed once for the same
     reason.
 
-    ``store_root=None`` (gate/bench mode) materializes via eager
-    localCheckpoint — fast, but executor-local and non-replicated.
+    ``store_root=None`` (gate/bench mode) materializes in the "shared"
+    role of session.materialize — fast, but executor-local and
+    non-replicated.
     ``store_root=<dir>`` is the PRODUCTION path: every chained table is
     written to durable partitioned parquet and the read-back is what
     downstream tables consume, so an executor loss can only re-run one
@@ -828,7 +822,7 @@ def build_stats(
     real counts."""
     if checkpoint_facts:
         for fact in ("document", "sentiment", "webresource"):
-            spark.table(fact).localCheckpoint(eager=True).createOrReplaceTempView(fact)
+            materialize(spark.table(fact), "shared").createOrReplaceTempView(fact)
     out: dict[str, DataFrame] = {}
     for name in STATS_ORDER:
         if name == "wrsocialcount" and social_counts is not None:
@@ -845,7 +839,7 @@ def build_stats(
             w.parquet(path)
             df = spark.read.parquet(path)
         elif persist:
-            df = df.localCheckpoint(eager=True)
+            df = materialize(df, "shared")
         df.createOrReplaceTempView(name)
         out[name] = df
     # trivial SELECT * presentation shells (never materialized — they are

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def get_spark(
@@ -69,25 +70,41 @@ def get_spark(
     return spark
 
 
-def scratch_checkpoint(df, storage_env: str = "SPARK_GRAFT_SCRATCH_LEVEL"):
-    """Eager localCheckpoint for staged ONE-SHOT intermediates (shingle
-    tables, LSH band relations, tf tables...) that are read a few times by
-    the queries built over them and then linger for the session (their
-    temp views keep the blocks referenced).
+# storage level per materialize() role; None keeps localCheckpoint's own
+# default, the JVM's deserialized MEMORY_AND_DISK (pyspark's
+# StorageLevel.MEMORY_AND_DISK is the serialized form)
+_ROLE_LEVELS = {"shared": None, "scratch": StorageLevel.DISK_ONLY}
 
-    Default storage DISK_ONLY, not the deserialized MEMORY_AND_DISK the
-    pipeline's shared _pin barriers use: a bench/driver session runs ~77
-    gates back-to-back and every gate's deserialized scratch blocks stay
-    pinned on the JVM heap for the rest of the run — measured 2-3x
-    slowdown of late-session queries from GC/storage pressure (stattopic
-    44s mid-session vs 15s fresh at sf1.0). DISK_ONLY blocks are
-    serialized bytes in spark.local.dir (tmpfs /dev/shm here — RAM speed,
-    zero heap residency); re-reads pay one deserialization, which the
-    A/B below showed is noise for relations consumed 1-3 times.
-    Override per-run via $SPARK_GRAFT_SCRATCH_LEVEL."""
-    import os as _os
 
-    from pyspark.storagelevel import StorageLevel
+def materialize(df: DataFrame, role: str) -> DataFrame:
+    """Compute ``df`` now and return a frame that reads the stored blocks.
 
-    name = _os.environ.get(storage_env, "DISK_ONLY")
-    return df.localCheckpoint(eager=True, storageLevel=getattr(StorageLevel, name))
+    Every eager materialization in the engine goes through here. Both
+    roles are an eager localCheckpoint: it holds the data like persist()
+    and also truncates the logical plan, so a downstream plan starts at a
+    leaf instead of re-planning (and re-optimizing at every AQE stage
+    boundary) a deep DAG. On the indexer DAG that re-planning was 37% of
+    job wall as driver-idle gaps. The two roles differ only in storage:
+
+    - ``"shared"``: localCheckpoint's default level, MEMORY_AND_DISK
+      (deserialized). For barriers in a pipeline that later stages read
+      many times: the indexer stages, stats facts and tables, component
+      rounds, the similarity bases. MEMORY_AND_DISK_SER measured no
+      better on a 2M-turn input.
+    - ``"scratch"``: DISK_ONLY. For staged one-shot intermediates
+      (shingle tables, LSH bands, tf tables, BPE state) that a gate reads
+      1-3 times and whose blocks then linger for the session through
+      their temp views. A session that runs every gate back to back keeps
+      each gate's deserialized blocks on the JVM heap; that slowed
+      late-session queries 2-3x from GC and storage pressure (stattopic
+      44 s mid-session vs 15 s fresh at sf1.0). DISK_ONLY blocks are
+      serialized bytes in spark.local.dir with no heap residency, and the
+      extra deserialization was noise for relations read 1-3 times.
+
+    Per-micro-batch frames are NOT materialized here: the streaming
+    indexer, the dataprep stream and MergeTable.merge use lazy
+    ``persist()``/``unpersist()`` pairs released by their own batch. A
+    checkpoint turns the wide frame into a row-based LogicalRDD and its
+    consumers lose the columnar cache scan (+55% batch wall measured).
+    """
+    return df.localCheckpoint(eager=True, storageLevel=_ROLE_LEVELS[role])

@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dataflow_opinion_analysis_spark.session import materialize
+
 K = 32  # minhash permutations
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
@@ -405,11 +407,11 @@ def fingerprint_dedupe_batch(winners, store, batch_id: int):
             }
         )
 
-    verdicts = (
+    verdicts = materialize(
         keyed.groupBy(*keys)
         .cogroup(stored.groupBy(*keys))
-        .applyInPandas(fn, VERDICT_OUT_SCHEMA)
-        .localCheckpoint(eager=True)
+        .applyInPandas(fn, VERDICT_OUT_SCHEMA),
+        "shared",
     )
     store.merge(
         verdicts.filter(F.col("sig").isNotNull()).select(

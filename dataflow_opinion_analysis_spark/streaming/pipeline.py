@@ -36,7 +36,6 @@ turns (behind the watermark) are counted in ``metrics`` instead of sunk.
 from __future__ import annotations
 
 import concurrent.futures as _futures
-import json
 import os
 import uuid as _uuid
 from dataclasses import dataclass
@@ -174,33 +173,13 @@ def process_batch(
     default is 1.0, IndexerPipelineUtils.java:395-398; kept 0.0 here so
     the stream==batch equivalence tests stay enrichment-free unless both
     sides opt in)."""
-    spark = assembled.sparkSession
-    # phase profiling (SPARK_GRAFT_BATCH_PROFILE=1): wall per driver-side
-    # phase, printed as one JSON line per batch — the tool that localizes
-    # per-micro-batch serial residue (scripts/profile_stream_residue.py)
-    import time as _time
-
-    _prof_on = os.environ.get("SPARK_GRAFT_BATCH_PROFILE") == "1"
-    _prof: dict[str, float] = {}
-    _t_start = _time.perf_counter()
-    _t_last = _t_start
-
-    def _mark(phase: str) -> None:
-        nonlocal _t_last
-        if _prof_on:
-            now = _time.perf_counter()
-            _prof[phase] = round(now - _t_last, 3)
-            _t_last = now
-
     # every persist is recorded here and released at the end of the batch
     # regardless of which flag branches were taken — rebinding a name to a
     # derived frame must never orphan a persisted parent across
     # micro-batches (executor storage would grow until ContextCleaner GC)
     persisted: list[DataFrame] = []
-    # persist, NOT localCheckpoint: A/B-measured — checkpointing the wide
-    # assembled frame converts it to a row-based LogicalRDD and every
-    # downstream consumer loses the columnar cache scan (+55% batch wall);
-    # the columnar persist is materialized by the stats agg below.
+    # a columnar persist (see session.materialize for why not a
+    # checkpoint), materialized by the stats agg below
     assembled = assembled.persist()
     persisted.append(assembled)
     stats = assembled.agg(
@@ -209,7 +188,6 @@ def process_batch(
         F.sum(F.when(F.col("status") == "overflow", 1).otherwise(0)).alias("n_overflow"),
         F.max("ts").alias("max_ts"),
     ).collect()[0]
-    _mark("stats_agg")
     n_input = stats.n_input or 0
     n_late = stats.n_late or 0
     n_overflow = stats.n_overflow or 0
@@ -240,10 +218,6 @@ def process_batch(
         )
         for df in persisted:
             df.unpersist()
-        if _prof_on:
-            _prof["total"] = round(_time.perf_counter() - _t_start, 3)
-            print(json.dumps({"profile_batch": int(batch_id),
-                              "n_input": 0, **_prof}), flush=True)
         return {"batch_id": batch_id, "n_input": 0, "n_late": 0,
                 "n_documents": 0, "n_sentiments": 0, "n_failed": 0}
 
@@ -259,7 +233,7 @@ def process_batch(
     # over the wide text-bearing frame. Before this cache the webresource
     # merge alone re-derived the batch twice (dupes + skipped branches) and
     # the claim chain a third time: per-micro-batch serial residue that
-    # capped 2->8 scaling (profiled via scripts/profile_stream_residue.py).
+    # capped 2->8 scaling.
     # The wide text-bearing derivation now materializes exactly ONCE, into
     # the tagged-winners cache below. O(batch × ~200B) executor memory.
     _key_cols = [
@@ -324,7 +298,6 @@ def process_batch(
     # routing joins read the caches — concurrently, without the
     # double-compute race an unmaterialized persist invites
     new_claims.count()
-    _mark("ci_claims")
     # the content-index write is off the critical path: routing uses the
     # cached claim frames, not the store, so the narrow write job overlaps
     # the tag/fan-out compute below; joined before the metrics commit
@@ -338,7 +311,6 @@ def process_batch(
     # leak a live thread per failed batch; ci_future.result() below is
     # unaffected.
     _ci_pool.shutdown(wait=False)
-    _mark("content_index_merge")
     # Routing map = prior claims ∪ this batch's claims — identical to
     # re-reading the post-merge index (every batch hash has a winner:
     # previously claimed hashes are in prior_claims, the rest have an
@@ -401,7 +373,6 @@ def process_batch(
             ).filter(F.col("is_dupe")).select(
                 F.col("document_hash"), "is_dupe", "winner_document_hash"
             )
-            _mark("fingerprint_dedupe")
         else:
             verdict_input = winners.select(
                 "expected_document_hash", "conv_id", "turn_idx", "title",
@@ -436,12 +407,8 @@ def process_batch(
     # materialize the winners cache ONCE before deriving the sink frames:
     # all three are Arrow fan-outs over it, and concurrent merge jobs
     # racing an unmaterialized cache each recompute the NLP chain for
-    # partitions not yet stored. (localCheckpoint instead of persist+count
-    # was A/B'd here and REJECTED: it converts the wide frame to a
-    # row-based LogicalRDD and the fan-out consumers lose the columnar
-    # cache scan — slower despite the truncated logical plan.)
+    # partitions not yet stored.
     soft_winners.count()
-    _mark("winners_materialize")
 
     document = fanout.document_rows(soft_winners, extra_cols=["content_hash"])
     # fused Arrow fan-out: passage rows carry the doc key fields — the
@@ -481,17 +448,10 @@ def process_batch(
     # raises pre-commit on a gross uniqueness violation (Observation
     # guard). This is the O(batch)-not-O(table) requirement: at 10^12
     # turns the sinks cannot re-scan their history every commit.
-    def _timed_merge(name, table, frame):
-        t0 = _time.perf_counter()
-        n = table.merge(frame, batch_id, assume_new=True)
-        if _prof_on:
-            _prof[f"sink_{name}"] = round(_time.perf_counter() - t0, 3)
-        return n
-
     with _futures.ThreadPoolExecutor(max_workers=3) as pool:
-        f_docs = pool.submit(_timed_merge, "document", sinks.document, document)
-        f_sents = pool.submit(_timed_merge, "sentiment", sinks.sentiment, sentiment)
-        f_wr = pool.submit(_timed_merge, "webresource", sinks.webresource, wr)
+        f_docs = pool.submit(sinks.document.merge, document, batch_id, assume_new=True)
+        f_sents = pool.submit(sinks.sentiment.merge, sentiment, batch_id, assume_new=True)
+        f_wr = pool.submit(sinks.webresource.merge, wr, batch_id, assume_new=True)
         n_docs = f_docs.result()
         n_sents = f_sents.result()
         f_wr.result()
@@ -503,7 +463,6 @@ def process_batch(
     # future (MergeTable._commit's parent check) instead of renaming the
     # pointer backward over later batches' commits.
     ci_future.result()
-    _mark("sink_merges")
 
     max_ts = stats.max_ts
     # dupe counts are diagnostics only; -1 when skipped (recomputing them
@@ -519,10 +478,6 @@ def process_batch(
 
     for df in persisted:
         df.unpersist()
-    if _prof_on:
-        _prof["total"] = round(_time.perf_counter() - _t_start, 3)
-        print(json.dumps({"profile_batch": int(batch_id),
-                          "n_input": int(n_input), **_prof}), flush=True)
     return {"batch_id": batch_id, "n_input": n_input, "n_late": n_late,
             "n_documents": n_docs, "n_sentiments": n_sents,
             "n_failed": n_failed}

@@ -175,10 +175,12 @@ def assemble_threads_fn(
     #    that must survive). They are deliberately NOT clamped to
     #    SEEN_CAP: evicting an emitted above-wm pair would re-admit its
     #    redelivery as 'ok'/'overflow' and commit duplicate keys through
-    #    the assume_new sinks. The set stays bounded anyway — emitted
-    #    pairs age below the watermark (freeing the budget) and one call
-    #    can add at most its own batch's emissions, so the transient
-    #    excess is O(overflow batch), never O(history);
+    #    the assume_new sinks. The set is bounded only while the
+    #    watermark advances: emitted pairs age below it and free the
+    #    budget. One call adds at most its own batch's emissions, but if
+    #    the watermark stalls while a hot conversation keeps overflowing,
+    #    the excess grows by each batch's emissions with no upper bound
+    #    (no hard cap exists yet);
     # 2. still-PENDING above-wm pairs next — pkeys double-covers them
     #    while pending, and the emission re-add above restores their
     #    fence entry if evicted here;

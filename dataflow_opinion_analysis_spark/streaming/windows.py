@@ -43,6 +43,7 @@ from dataflow_opinion_analysis_spark.operators.events_ops import (
     SLIDE_STEP_MIN,
     SLIDE_WINDOW,
 )
+from dataflow_opinion_analysis_spark.session import materialize
 
 # stream == batch equivalence depends on every window constant coming
 # from the batch operator module — a locally re-declared copy could
@@ -269,9 +270,10 @@ def run_windowed_agg_table(
       the window end — late events inside the watermark are folded in
       BEFORE emission, so the emitted row is final;
     - a ``MergeTable`` keyed by (window_start, event_type): because
-      every emitted row is final, the sink needs only the plain
-      insert-if-absent MERGE — a replayed micro-batch is fenced by
-      batch id and, independently, by the key anti-join.
+      every emitted row is final and emitted once, the merge runs with
+      ``assume_new``, which skips the key anti-join — so the batch-id
+      fence is the only guard against a replayed micro-batch (the HLL
+      duplicate tripwire still catches gross key repeats).
 
     Returns ``(query, table)``; the caller drains/stops the query. The
     table equals the batch aggregate over the closed input for every
@@ -300,8 +302,8 @@ def run_windowed_agg_table(
         watermark,
     )
     def _fb(df: DataFrame, bid: int):
-        # materialize the micro-batch ONCE (localCheckpoint runs every
-        # partition of the stateful plan, which Spark's state-store
+        # materialize the micro-batch ONCE (the eager checkpoint runs
+        # every partition of the stateful plan, which Spark's state-store
         # commit validation requires, and merge's several consumers then
         # read the checkpoint instead of re-running the aggregate).
         # assume_new: in APPEND output mode a (window_start, event_type)
@@ -311,7 +313,7 @@ def run_windowed_agg_table(
         # are fenced by batch id. The merge is then one narrow write
         # instead of bounds-agg + history anti-join per trigger, with
         # the HLL duplicate tripwire still armed.
-        frame = df.localCheckpoint(eager=True)
+        frame = materialize(df, "shared")
         table.merge(frame, bid, assume_new=True)
 
     q = (
@@ -370,8 +372,6 @@ def events_cagg_stream(spark, sf_dir: str) -> DataFrame:
     )
     # materialize, then remove the per-invocation temp root (input copy,
     # store, checkpoint) — the gate used to leak it every call
-    from dataflow_opinion_analysis_spark.session import scratch_checkpoint
-
-    out = scratch_checkpoint(out)
+    out = materialize(out, "scratch")
     _sh.rmtree(root, ignore_errors=True)
     return out

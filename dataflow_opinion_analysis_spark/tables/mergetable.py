@@ -491,7 +491,8 @@ class MergeTable:
 
         A cheap runtime guard still runs under ``assume_unique``/
         ``assume_new``: the write job observes approx_count_distinct of
-        the first key column beside the row count, and a gross violation
+        the full key tuple (a struct of every key column) beside the row
+        count, and a gross violation
         (>~10% duplicate keys, beyond the HLL sketch's error band) raises
         BEFORE the manifest commit — the batch directory is left orphaned
         for vacuum(), the table state is untouched.

@@ -554,7 +554,7 @@ def write_md(result: dict) -> None:
         "**Round-5 new-code measurement (pre-declared before launch,",
         "frozen flags, recorded win-or-lose).** The serial residue named",
         "above was then actually cut (commit b0143d3): a per-phase",
-        "profiler (scripts/profile_stream_residue.py) localized it to",
+        "profiler localized it to",
         "the sink merges — every micro-batch paid a wide dropDuplicates",
         "shuffle, a bounds job, and an anti-join scan of the GROWING",
         "table per sink — and the assembler redelivery fence +",
@@ -618,7 +618,7 @@ def write_md(result: dict) -> None:
         "is the number.",
         "",
         "Round-5 end-of-round residue study (informal warm profiles,",
-        "scripts/profile_stream_residue.py, quiet host probes 223",
+        "per-phase profiler, quiet host probes 223",
         "Miter/s; NOT protocol evidence). Per-phase steady 2->8 ratios",
         "at trigger 32 (ideal 4.0): state+assembly stage 3.8-4.2",
         "(scales), claim joins 1.4 (fixed-cost), tag materialize 3.0,",

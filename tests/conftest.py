@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,6 +11,10 @@ import pytest
 def spark():
     from dataflow_opinion_analysis_spark.session import get_spark
 
+    # get_spark's 48g default heap lets one long-lived test JVM grow past a
+    # small host's RAM (it was OOM-killed mid-suite on a 15 GB, 4-core VM,
+    # failing every later Spark test); an explicit setting still wins
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
     s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()

@@ -93,7 +93,7 @@ def test_pipeline_cluster_dedup_option(spark):
 
     exact_ids = {r.doc_id for r in cc.exact.select("doc_id").collect()}
     cc.exact.createOrReplaceTempView("tc_exact")
-    pairs = spark.sql(dataprep.dedup_minhash_sql_spark("tc_exact"))
+    pairs = dataprep.minhash_pairs(spark, "tc_exact", "tc_mh")
     comp = components.connected_components(pairs, a="doc_a", b="doc_b")
     non_canonical = {
         r.node for r in comp.filter(F.col("node") != F.col("rep")).collect()

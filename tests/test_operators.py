@@ -653,6 +653,26 @@ def test_bpe_merges_match_pure_python(spark):
         )
 
 
+def test_bpe_merges_empty_corpus_matches_oracle(spark, tmp_path):
+    """An empty documents table has no pair to merge in any round: Spark
+    returns the DuckDB oracle's rows instead of failing on the empty
+    round-1 argmax."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from dataflow_opinion_analysis_spark import oracles_dataprep
+    from dataflow_opinion_analysis_spark.operators import dataprep
+    from tests.conftest import SF_DIR
+
+    docs = tmp_path / "documents.parquet"
+    pq.write_table(pq.read_schema(f"{SF_DIR}/documents.parquet").empty_table(), docs)
+    got = sorted(tuple(r) for r in dataprep.text_bpe_merges(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    want = sorted(con.execute(oracles_dataprep.TEXT_BPE_MERGES_SQL).fetchall())
+    assert got == want == [(r, None, None, None, 0) for r in (1, 2, 3)]
+
+
 def test_fit_cache_hit_rebinds_embeddings_view(spark):
     """A memoized fit must still (re)bind the `embeddings` temp view to
     ITS sf_dir: without the rebind, a cache-hit serve after any other
