@@ -132,12 +132,11 @@ def main() -> int:
 
         # summarize the archive replay BEFORE the trailing probe so the
         # steady-tps / final-lag numbers keep describing the replay itself
-        if sinks.query_metrics is not None:
-            _drain_listener(sinks.query_metrics)
-            s = sinks.query_metrics.summary()
-            stream_lag = s.get("median_watermark_lag_sec")
-            stream_final_lag = s.get("final_watermark_lag_sec")
-            stream_steady_tps = s.get("steady_rows_per_sec")
+        _drain_listener(sinks.query_metrics)
+        s = sinks.query_metrics.summary()
+        stream_lag = s.get("median_watermark_lag_sec")
+        stream_final_lag = s.get("final_watermark_lag_sec")
+        stream_steady_tps = s.get("steady_rows_per_sec")
 
         # caught-up deployment lag: the archive replay's final lag is
         # dominated by the event-time span of a fat 16-file trigger on
@@ -169,13 +168,10 @@ def main() -> int:
                     os.path.join(sdata, f"part-trail{k}.parquet"),
                 )
                 q.processAllAvailable()
-            if sinks.query_metrics is not None:
-                _drain_listener(sinks.query_metrics)
-                fed = [
-                    r for r in sinks.query_metrics.rows if r["num_input_rows"]
-                ]
-                if fed and fed[-1]["watermark_lag_sec"] is not None:
-                    caughtup_lag = round(fed[-1]["watermark_lag_sec"], 1)
+            _drain_listener(sinks.query_metrics)
+            fed = [r for r in sinks.query_metrics.rows if r["num_input_rows"]]
+            if fed and fed[-1]["watermark_lag_sec"] is not None:
+                caughtup_lag = round(fed[-1]["watermark_lag_sec"], 1)
         except Exception as e:  # noqa: BLE001
             print(f"bench: caught-up lag probe failed: {e}", file=sys.stderr)
         q.stop()

@@ -97,10 +97,9 @@ def cmd_stream(args) -> int:
     if args.drain:
         q.processAllAvailable()
         q.stop()
-        if sinks.query_metrics is not None:
-            import json
+        import json
 
-            print("query_metrics:", json.dumps(sinks.query_metrics.summary()))
+        print("query_metrics:", json.dumps(sinks.query_metrics.summary()))
     else:
         q.awaitTermination()
     spark.stop()

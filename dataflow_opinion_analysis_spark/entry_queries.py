@@ -115,7 +115,6 @@ def _stats_tables(spark: SparkSession, sf_dir: str):
             # re-materialize already-truncated frames (~3s at sf1.0)
             lambda: stats.build_stats(
                 spark,
-                persist=True,
                 domainopinions_min_docs=stats.GATE_MIN_DOMAIN_DOCS,
                 domainopinions_min_basic8=stats.GATE_MIN_BASIC8,
                 checkpoint_facts=False,

@@ -3,7 +3,7 @@
 The analogue of the reference's parse/enrich ParDos (P1-P13 in SURVEY.md
 §2.2) plus the thread reconstruction (J1, ``IndexerPipeline.java:540-607``)
 — in batch mode the parent link is a partitioned ``lag`` window over
-(conv_id, turn_idx); the streaming twin lives in ``streaming/pipeline.py``.
+(conv_id, turn_idx); the streaming twin lives in ``streaming/threads.py``.
 
 Everything here stays inside whole-stage codegen: string concat, hashes,
 date math, one window. The only exchange is the hash-partition on conv_id

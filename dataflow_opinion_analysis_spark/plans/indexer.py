@@ -3,9 +3,12 @@
 the reference uses (comments at :226-230): cheap exact dedupe BEFORE the
 expensive NLP stage, soft dedupe AFTER it (needs tags).
 
-One builder serves batch (``spark.read``) and streaming (``readStream`` +
-``foreachBatch`` in streaming/pipeline.py): the transformations are
-identical, only source/sink differ.
+Batch (``build_indexer``) and streaming (``streaming/pipeline.
+process_batch``) differ only up to exact dedupe: batch ranks the whole
+input, the stream routes each micro-batch through the durable content
+index. Everything after it — tag pass, dead-letter split, soft-dedupe
+routing, enrichment, fan-outs — is ``index_after_exact_dedupe``, one
+function both call.
 
 Plan shape (what .explain should show):
   parquet scan (pruned cols) -> codegen projections/hash derivations
@@ -29,6 +32,7 @@ of session.materialize, which truncates the deep DAG's lineage.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -44,11 +48,10 @@ class IndexerOutputs:
     webresource: DataFrame
     document: DataFrame
     sentiment: DataFrame
-    # diagnostics
-    input_content: DataFrame
+    # diagnostics: the tagged exact-dedupe winners the NLP stage kept
     winners: DataFrame
     # K2: docs the NLP stage failed on (strict_scoring=True), shaped like
-    # schemas.DEAD_LETTER minus batch_id; None when strict mode is off
+    # schemas.DEAD_LETTER; None when strict mode is off
     dead_letter: DataFrame | None = None
 
 
@@ -86,23 +89,76 @@ def build_indexer_from_input_content(
     batch / 1.0 streaming (IndexerPipelineUtils.java:395-398); this repo
     defaults to 0.0 so the enrichment-free goldens stay byte-stable —
     pass the reference value explicitly (cli.py exposes --enrich-ratio)."""
+
+    def pin(df: DataFrame) -> DataFrame:
+        return materialize(df, "shared") if persist else df
+
     to_index, skipped = ingest.split_skip_indexing(ic)
     # ONE checkpoint of the ranked frame serves both the winners chain and
     # the exact-dupes webresource branch (no second scan + window). Without
     # it, an A/B on a 2M-turn input at local[8] measured 49.3s vs 37.6s.
-    ranked = dedupe.exact_dedupe_ranked(to_index)
-    if persist:
-        ranked = materialize(ranked, "shared")
-    winners = ranked.filter(F.col("_rn") == 1).drop("_rn", "winner_document_hash")
-    exact_dupes = ranked.filter(F.col("_rn") > 1).drop("_rn")
+    ranked = pin(dedupe.exact_dedupe_ranked(to_index))
+    return index_after_exact_dedupe(
+        ranked.filter(F.col("_rn") == 1).drop("_rn", "winner_document_hash"),
+        ranked.filter(F.col("_rn") > 1).drop("_rn"),
+        skipped,
+        pin=pin,
+        near_dupe_verdicts=vote_rule_verdicts if soft_dedupe_enabled else None,
+        enrich_ratio=enrich_ratio,
+        strict_scoring=strict_scoring,
+    )
 
+
+def vote_rule_verdicts(winners: DataFrame) -> DataFrame:
+    """Whole-frame soft-dedupe verdicts (dedupe.soft_dedupe). The verdict
+    chain sees only NARROW columns (hash, keys, title, text_len, tag
+    names) — the wide text column never enters the dedupe shuffles."""
+    return dedupe.soft_dedupe(
+        winners.select(
+            "expected_document_hash",
+            "conv_id",
+            "turn_idx",
+            "title",
+            F.length("text").alias("text_len"),
+            "tag_names",
+        )
+    )
+
+
+def index_after_exact_dedupe(
+    winners: DataFrame,
+    exact_dupes: DataFrame,
+    skipped: DataFrame,
+    *,
+    pin: Callable[[DataFrame], DataFrame],
+    near_dupe_verdicts: Callable[[DataFrame], DataFrame] | None,
+    enrich_ratio: float,
+    strict_scoring: bool,
+    dead_letter_batch_id: int | None = None,
+    document_extra_cols: list[str] | None = None,
+) -> IndexerOutputs:
+    """Every stage after exact dedupe, for batch and stream alike.
+
+    Inputs: the exact-dedupe ``winners`` (InputContent rows), the
+    ``exact_dupes`` (carrying ``winner_document_hash``) and the
+    ``skipped`` rows. Where the callers differ, they pass it in:
+
+    - ``pin``: how a stage is held — batch materializes it ("shared"),
+      the stream persists it lazily for release at the end of its batch.
+      Applied to the tagged winners, the soft winners and the enriched
+      winners.
+    - ``near_dupe_verdicts``: winners -> (document_hash, is_dupe,
+      winner_document_hash) verdicts; ``vote_rule_verdicts`` or the
+      stream's durable fingerprint store. None skips soft dedupe.
+    - ``dead_letter_batch_id``: the ``batch_id`` of the dead-letter rows
+      (NULL in batch).
+    - ``document_extra_cols``: passed through onto the document rows.
+    """
     # FUSED tag stage: one narrow Arrow pass appends (Tags, tag_names) to
     # the full winners frame — no token shuffles, no doc-sized join-back.
     # The Arrow pass measured 0.89 scaling efficiency 2->8 cores vs 0.57
     # for the 3-shuffle SQL pipeline it replaced.
-    winners = scorer.tags_augment(winners, strict=strict_scoring)
-    if persist:
-        winners = materialize(winners, "shared")
+    winners = pin(scorer.tags_augment(winners, strict=strict_scoring))
 
     dead_letter = None
     if strict_scoring:
@@ -114,28 +170,18 @@ def build_indexer_from_input_content(
             "turn_idx",
             F.col("expected_document_hash").alias("document_hash"),
             F.col("_index_error").alias("error"),
-            F.lit(None).cast("long").alias("batch_id"),
+            F.lit(dead_letter_batch_id).cast("long").alias("batch_id"),
         )
         winners = winners.filter(F.col("_index_error").isNull()).drop("_index_error")
 
-    if soft_dedupe_enabled:
-        # verdict chain sees only NARROW columns (hash, keys, title,
-        # text_len, tag names) — the wide text column never enters the
-        # dedupe shuffles
-        verdict_input = winners.select(
-            "expected_document_hash",
-            "conv_id",
-            "turn_idx",
-            "title",
-            F.length("text").alias("text_len"),
-            "tag_names",
-        )
+    soft_winners, soft_dupes = winners, None
+    if near_dupe_verdicts is not None:
         # join back ONLY the dupe verdicts: the verdict is trivially
         # is_dupe=false for every other doc, and the dupe subset is a
         # small fraction of the corpus, so Catalyst/AQE can broadcast it
         # instead of shuffling the wide winners frame (at fact scale it
         # degrades gracefully to a shuffle join of a much smaller side)
-        dupe_verdicts = dedupe.soft_dedupe(verdict_input).filter(F.col("is_dupe"))
+        dupe_verdicts = near_dupe_verdicts(winners).filter(F.col("is_dupe"))
         routed = winners.join(
             dupe_verdicts.select(
                 F.col("document_hash").alias("expected_document_hash"),
@@ -145,15 +191,12 @@ def build_indexer_from_input_content(
             "expected_document_hash",
             "left",
         )
-        soft_winners = routed.filter(F.col("is_dupe").isNull()).drop(
-            "is_dupe", "winner_document_hash"
+        soft_winners = pin(
+            routed.filter(F.col("is_dupe").isNull()).drop(
+                "is_dupe", "winner_document_hash"
+            )
         )
         soft_dupes = routed.filter(F.col("is_dupe")).drop("is_dupe")
-        if persist:
-            soft_winners = materialize(soft_winners, "shared")
-    else:
-        soft_winners = winners
-        soft_dupes = None
 
     if enrich_ratio > 0.0:
         # N2 wiring (reference order: enrichment between dedupe and the
@@ -161,36 +204,30 @@ def build_indexer_from_input_content(
         # tags to the Tags array of a hash-chosen enrich_ratio fraction
         from dataflow_opinion_analysis_spark.functions import entities
 
-        soft_winners = entities.enrich_with_entities(
-            soft_winners,
-            b_ratio=enrich_ratio,
-            hash_col="expected_document_hash",
+        soft_winners = pin(
+            entities.enrich_with_entities(
+                soft_winners,
+                b_ratio=enrich_ratio,
+                hash_col="expected_document_hash",
+            )
         )
-        if persist:
-            soft_winners = materialize(soft_winners, "shared")
 
-    document = fanout.document_rows(soft_winners)
-    # fused Arrow fan-out carries the doc key fields onto each passage row
-    # — the sentiment branch is join-free, and soft-dupe docs are never
-    # scored at all (the round-2 plan scored them then dropped the rows)
-    sentiment = fanout.sentiment_rows_fused(soft_winners)
-
-    wr_parts = [
-        fanout.webresource_rows(soft_winners),
-        fanout.webresource_rows(exact_dupes, "winner_document_hash"),
-        fanout.webresource_rows(skipped),
-    ]
+    webresource = (
+        fanout.webresource_rows(soft_winners)
+        .unionByName(fanout.webresource_rows(exact_dupes, "winner_document_hash"))
+        .unionByName(fanout.webresource_rows(skipped))
+    )
     if soft_dupes is not None:
-        wr_parts.append(fanout.webresource_rows(soft_dupes, "winner_document_hash"))
-    webresource = wr_parts[0]
-    for p in wr_parts[1:]:
-        webresource = webresource.unionByName(p)
-
+        webresource = webresource.unionByName(
+            fanout.webresource_rows(soft_dupes, "winner_document_hash")
+        )
     return IndexerOutputs(
         webresource=webresource,
-        document=document,
-        sentiment=sentiment,
-        input_content=ic,
+        document=fanout.document_rows(soft_winners, extra_cols=document_extra_cols),
+        # fused Arrow fan-out carries the doc key fields onto each passage
+        # row — the sentiment branch is join-free, and soft-dupe docs are
+        # never scored at all
+        sentiment=fanout.sentiment_rows_fused(soft_winners),
         winners=winners,
         dead_letter=dead_letter,
     )

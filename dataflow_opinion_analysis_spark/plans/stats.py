@@ -150,11 +150,9 @@ FROM (SELECT explode(sequence(to_date(min(PublicationTime)),
 # ---------------------------------------------------------------------------
 # stattopic (daily) — single + combi topics (StatsCalcPipelineUtils.java:59-138)
 # ---------------------------------------------------------------------------
-# SentimentTags is read by BOTH SentimentTagCombos and CalcStatSentiments:
-# Catalyst inlines a multi-referenced CTE once per reference, so the
-# all-in-one SQL ran the p-join + Tags explode twice. The fragments below
-# compose the unchanged one-shot text (stattopic_sql) AND a staged runner
-# (stattopic_df) that materializes SentimentTags once behind a checkpoint.
+# SentimentTags is read by BOTH SentimentTagCombos and CalcStatSentiments
+# (Catalyst inlines a multi-referenced CTE once per reference), so it is
+# the staged head: staged_df materializes it once behind a checkpoint.
 def _stattopic_head_sql(p_sql: str) -> str:
     return f"""
 WITH p AS ({p_sql})
@@ -163,26 +161,6 @@ FROM p JOIN sentiment s ON s.DocumentDateId = p.SnapshotDateId
 LATERAL VIEW explode(s.Tags) tt AS t
 WHERE s.SentimentTotalScore > 0
 """
-
-
-def stattopic_sql(p_sql: str = P_ALL_DAYS_SQL) -> str:
-    return f"""
-WITH p AS ({p_sql}),
-SentimentTags AS (
-  SELECT p.SnapshotDateId, s.SentimentHash, t.Tag, t.GoodAsTopic, s.Tags AS Tags
-  FROM p JOIN sentiment s ON s.DocumentDateId = p.SnapshotDateId
-  LATERAL VIEW explode(s.Tags) tt AS t
-  WHERE s.SentimentTotalScore > 0
-),
-{_stattopic_tail_sql("SentimentTags")}"""
-
-
-def stattopic_df(spark, p_sql: str = P_ALL_DAYS_SQL):
-    """Staged twin of ``spark.sql(stattopic_sql(p_sql))`` — identical
-    rows; SentimentTags computed once."""
-    head = materialize(spark.sql(_stattopic_head_sql(p_sql)), "scratch")
-    head.createOrReplaceTempView("_stattopic_st")
-    return spark.sql(f"WITH {_stattopic_tail_sql('_stattopic_st')}")
 
 
 def _stattopic_tail_sql(st: str) -> str:
@@ -256,8 +234,8 @@ FROM CalcStatAllTopics
 # statstoryimpact (daily) — trailing-8-day doc window + wrsocialcount cntFb
 # (:158-216). The day-range predicate is an explode(sequence) equi-join.
 # ---------------------------------------------------------------------------
-# s1 is read by BOTH s2 and s3 (Catalyst re-expands it per reference) —
-# same fragment pattern as stattopic: one-shot text + staged runner.
+# s1 is read by BOTH s2 and s3 (Catalyst re-expands it per reference), so
+# it is the staged head, as in stattopic.
 def _statstoryimpact_head_sql(p_sql: str) -> str:
     return f"""
 WITH p AS ({p_sql}),
@@ -271,29 +249,6 @@ s1x AS (
 )
 SELECT s1x.* FROM s1x JOIN p ON p.SnapshotDateId = s1x.SnapshotDateId
 """
-
-
-def statstoryimpact_sql(p_sql: str = P_ALL_DAYS_SQL) -> str:
-    return f"""
-WITH p AS ({p_sql}),
-s1x AS (
-  SELECT cast(date_format(sd, 'yyyyMMdd') AS int) AS SnapshotDateId,
-         d.DocumentHash, d.DocumentCollectionId, d.CollectionItemId
-  FROM document d
-  LATERAL VIEW explode(sequence(to_date(d.PublicationTime),
-                                date_add(to_date(d.PublicationTime), {IMPACT_WINDOW_DAYS}),
-                                interval 1 day)) t AS sd
-),
-s1 AS (SELECT s1x.* FROM s1x JOIN p ON p.SnapshotDateId = s1x.SnapshotDateId),
-{_statstoryimpact_tail_sql("s1")}"""
-
-
-def statstoryimpact_df(spark, p_sql: str = P_ALL_DAYS_SQL):
-    """Staged twin of ``spark.sql(statstoryimpact_sql(p_sql))`` —
-    identical rows; s1 computed once."""
-    head = materialize(spark.sql(_statstoryimpact_head_sql(p_sql)), "scratch")
-    head.createOrReplaceTempView("_statstoryimpact_s1")
-    return spark.sql(f"WITH {_statstoryimpact_tail_sql('_statstoryimpact_s1')}")
 
 
 def _statstoryimpact_tail_sql(s1: str) -> str:
@@ -334,32 +289,8 @@ FROM s2 JOIN s4
 # statdomainopinions — per (Topic, Domain) Basic8 profile (:236-408)
 # ---------------------------------------------------------------------------
 # s3 is read by BOTH s4 and s6 (Catalyst re-expands the whole
-# s1/s1a/s2/s3 chain per reference — probed at 2x the table's cost):
-# same fragment pattern as stattopic — one-shot text + staged runner.
-def _sdo_head_sql(min_docs: int) -> str:
-    return f"""
-WITH {_sdo_prefix_sql(min_docs)}
-{_sdo_s3_body()}
-"""
-
-
-def statdomainopinions_sql(min_docs: int = MIN_DOMAIN_DOCS, min_basic8: float = MIN_BASIC8) -> str:
-    return f"""
-WITH {_sdo_prefix_sql(min_docs)},
-s3 AS (
-{_sdo_s3_body()}
-),
-{_sdo_tail_sql("s3", min_basic8)}"""
-
-
-def statdomainopinions_df(spark, min_docs: int = MIN_DOMAIN_DOCS, min_basic8: float = MIN_BASIC8):
-    """Staged twin of ``spark.sql(statdomainopinions_sql(...))`` —
-    identical rows; the s1/s1a/s2/s3 chain runs once."""
-    head = materialize(spark.sql(_sdo_head_sql(min_docs)), "scratch")
-    head.createOrReplaceTempView("_sdo_s3")
-    return spark.sql(f"WITH {_sdo_tail_sql('_sdo_s3', min_basic8)}")
-
-
+# s1/s1a/s2/s3 chain per reference — probed at 2x the table's cost), so
+# the s1..s3 chain is the staged head, as in stattopic.
 _SDO_WEEK = "concat(cast(year(PublicationTime) AS string), '_', lpad(cast(weekofyear(PublicationTime) AS string), 2, '0'))"
 _SDO_EMO8 = ["StJoy", "StAcceptance", "StFear", "StSurprise", "StSadness", "StDisgust", "StAnger", "StAnticipation"]
 
@@ -371,10 +302,9 @@ _SDO_EMO_STATS = ",\n    ".join(
 )
 
 
-def _sdo_prefix_sql(min_docs: int) -> str:
-    """The s1/s1a/s2 CTE list (shared by the one-shot text and the
-    staged head)."""
-    return f"""s1 AS (
+def _sdo_head_sql(min_docs: int) -> str:
+    return f"""
+WITH s1 AS (
   SELECT wr.Domain, count(DISTINCT DocumentHash) AS cntDocs
   FROM webresource wr
   GROUP BY 1 HAVING count(DISTINCT DocumentHash) > {min_docs}
@@ -403,11 +333,8 @@ s2 AS (
   FROM sentiment s
   JOIN webresource wr ON wr.DocumentHash = s.DocumentHash
   JOIN s1a ON s1a.Domain = wr.Domain
-)"""
-
-
-def _sdo_s3_body() -> str:
-    return f"""  SELECT
+)
+SELECT
     {_SDO_WEEK} AS PubWeek,
     Domain, IsTop50Domain, IsTop500Domain, ta AS Topic,
     sum(CASE WHEN Valence = 1 THEN 1 ELSE 0 END) AS cntPositives,
@@ -421,7 +348,8 @@ def _sdo_s3_body() -> str:
     greatest(cast(sum(StFear + StSadness + StDisgust + StAnger) AS double), 0.01)           AS Negative4Score
   FROM s2 LATERAL VIEW explode(s2.TopicArray) tt AS ta
   WHERE ta NOT IN (SELECT tp.Topic FROM topic tp WHERE tp.IsBlocked = 1)
-  GROUP BY 1, 2, 3, 4, 5"""
+  GROUP BY 1, 2, 3, 4, 5
+"""
 
 
 def _sdo_tail_sql(s3: str, min_basic8: float) -> str:
@@ -471,37 +399,19 @@ SELECT * FROM s7 WHERE Basic8Score >= {min_basic8}
 # ---------------------------------------------------------------------------
 # statstoryrank — latest-snapshot impact + cntFb ranks (:426-482)
 # ---------------------------------------------------------------------------
-# s1 is read by BOTH s2 and s3 — same fragment pattern as the other
-# staged tables.
-def _storyrank_head_sql(lookback_days: int) -> str:
-    week = "concat(cast(year(d.PublicationTime) AS string), '_', lpad(cast(weekofyear(d.PublicationTime) AS string), 2, '0'))"
-    return f"""
+# s1 is read by BOTH s2 and s3, so it is the staged head, as in stattopic.
+_STORYRANK_HEAD_SQL = f"""
 SELECT d.PublicationDateId, d.DocumentHash,
        date_format(d.PublicationTime, 'yyyy_MM') AS PubMonth,
-       {week} AS PubWeek,
+       concat(cast(year(d.PublicationTime) AS string), '_',
+              lpad(cast(weekofyear(d.PublicationTime) AS string), 2, '0')) AS PubWeek,
        substring(wrOrig.Title, 1, 1000) AS Title,
        wrOrig.Url, wrOrig.Domain, wrOrig.Author
 FROM document d
 JOIN webresource wrOrig ON wrOrig.WebResourceHash = d.MainWebResourceHash
 WHERE cast(d.PublicationTime AS date) >=
-      date_sub((SELECT v.DateAsDate FROM vwlast7days v WHERE v.TimeMarker = 'T-1'), {lookback_days})
+      date_sub((SELECT v.DateAsDate FROM vwlast7days v WHERE v.TimeMarker = 'T-1'), {STORYRANK_LOOKBACK})
 """
-
-
-def statstoryrank_sql(lookback_days: int = STORYRANK_LOOKBACK) -> str:
-    return f"""
-WITH s1 AS (
-{_storyrank_head_sql(lookback_days)}
-),
-{_storyrank_tail_sql("s1")}"""
-
-
-def statstoryrank_df(spark, lookback_days: int = STORYRANK_LOOKBACK):
-    """Staged twin of ``spark.sql(statstoryrank_sql())`` — identical
-    rows; s1 computed once."""
-    head = materialize(spark.sql(_storyrank_head_sql(lookback_days)), "scratch")
-    head.createOrReplaceTempView("_storyrank_s1")
-    return spark.sql(f"WITH {_storyrank_tail_sql('_storyrank_s1')}")
 
 
 def _storyrank_tail_sql(s1: str) -> str:
@@ -667,7 +577,7 @@ VW_SHELLS = {
     "vwtoptopic7dsentiment": "SELECT * FROM stattoptopic7dsentiment",
 }
 
-# table name -> SQL builder (chained names must already be registered as views)
+# dependency order: a table's SQL reads the views of the tables before it
 STATS_ORDER = [
     "wrsocialcount",
     "vwlast7days",
@@ -681,57 +591,50 @@ STATS_ORDER = [
     "vwsentiment4search7d",
 ]
 
-# which tables downstream tables read (persist these when materializing)
-_REUSED = {"wrsocialcount", "vwlast7days", "stattopic", "statstoryimpact", "statstoryrank", "stattoptopic7d"}
+# the tables rendered as one SQL text; the other four are staged_df's
+_SQL = {
+    "wrsocialcount": WRSOCIALCOUNT_SQL,
+    "vwlast7days": VWLAST7DAYS_SQL,
+    "stattoptopic7d": STATTOPTOPIC7D_SQL,
+    "stattopstory7d": STATTOPSTORY7D_SQL,
+    "stattoptopic7dsentiment": STATTOPTOPIC7DSENTIMENT_SQL,
+    "vwsentiment4search7d": VWSENTIMENT4SEARCH7D_SQL,
+}
 
 
-def stats_sql(name: str, domainopinions_min_docs: int = MIN_DOMAIN_DOCS,
-              domainopinions_min_basic8: float = MIN_BASIC8) -> str:
-    if name == "wrsocialcount":
-        return WRSOCIALCOUNT_SQL
-    if name == "vwlast7days":
-        return VWLAST7DAYS_SQL
+def staged_df(spark: SparkSession, name: str, p_sql: str = P_ALL_DAYS_SQL,
+              min_docs: int = MIN_DOMAIN_DOCS,
+              min_basic8: float = MIN_BASIC8) -> DataFrame:
+    """One of the four tables whose SQL reads an expensive CTE more than
+    once (Catalyst re-expands a CTE once per reference): its head — that
+    CTE — is materialized once in the "scratch" role as the view
+    ``_<name>_head``, and its tail reads the view. ``p_sql`` lists the
+    snapshot days of the two daily tables (all days by default;
+    stats_incremental passes one refresh's days)."""
     if name == "stattopic":
-        return stattopic_sql()
-    if name == "statstoryimpact":
-        return statstoryimpact_sql()
-    if name == "statdomainopinions":
-        return statdomainopinions_sql(domainopinions_min_docs, domainopinions_min_basic8)
-    if name == "statstoryrank":
-        return statstoryrank_sql()
-    if name == "stattoptopic7d":
-        return STATTOPTOPIC7D_SQL
-    if name == "stattopstory7d":
-        return STATTOPSTORY7D_SQL
-    if name == "stattoptopic7dsentiment":
-        return STATTOPTOPIC7DSENTIMENT_SQL
-    if name == "vwsentiment4search7d":
-        return VWSENTIMENT4SEARCH7D_SQL
-    raise KeyError(name)
+        head, tail = _stattopic_head_sql(p_sql), _stattopic_tail_sql
+    elif name == "statstoryimpact":
+        head, tail = _statstoryimpact_head_sql(p_sql), _statstoryimpact_tail_sql
+    elif name == "statdomainopinions":
+        head, tail = _sdo_head_sql(min_docs), lambda s3: _sdo_tail_sql(s3, min_basic8)
+    elif name == "statstoryrank":
+        head, tail = _STORYRANK_HEAD_SQL, _storyrank_tail_sql
+    else:
+        raise KeyError(name)
+    view = f"_{name}_head"
+    materialize(spark.sql(head), "scratch").createOrReplaceTempView(view)
+    return spark.sql(f"WITH {tail(view)}")
 
 
 def stats_df(spark: SparkSession, name: str,
              domainopinions_min_docs: int = MIN_DOMAIN_DOCS,
              domainopinions_min_basic8: float = MIN_BASIC8) -> DataFrame:
-    """DataFrame builder for one stats table — the staged runners for the
-    four tables whose SQL multi-references an expensive CTE (Catalyst
-    re-expands a CTE once per reference, so the one-shot texts ran
-    SentimentTags / s1 / the s1..s3 chain twice), ``spark.sql`` of the
-    unchanged text for the rest. Rows identical either way (the staged
-    twins differ only by a materialization barrier)."""
-    if name == "stattopic":
-        return stattopic_df(spark)
-    if name == "statstoryimpact":
-        return statstoryimpact_df(spark)
-    if name == "statdomainopinions":
-        return statdomainopinions_df(
-            spark, domainopinions_min_docs, domainopinions_min_basic8
-        )
-    if name == "statstoryrank":
-        return statstoryrank_df(spark)
-    return spark.sql(
-        stats_sql(name, domainopinions_min_docs, domainopinions_min_basic8)
-    )
+    """DataFrame builder for one stats table: ``spark.sql`` of its text,
+    or ``staged_df`` for the four staged tables."""
+    if name in _SQL:
+        return spark.sql(_SQL[name])
+    return staged_df(spark, name, min_docs=domainopinions_min_docs,
+                     min_basic8=domainopinions_min_basic8)
 
 
 # gate projections over the materialized views — arrays stringified
@@ -782,7 +685,6 @@ _PARTITIONED = {"stattopic", "statstoryimpact"}
 
 def build_stats(
     spark: SparkSession,
-    persist: bool = True,
     domainopinions_min_docs: int = MIN_DOMAIN_DOCS,
     domainopinions_min_basic8: float = MIN_BASIC8,
     checkpoint_facts: bool = True,
@@ -838,7 +740,7 @@ def build_stats(
                 w = w.partitionBy("SnapshotDateId")
             w.parquet(path)
             df = spark.read.parquet(path)
-        elif persist:
+        else:
             df = materialize(df, "shared")
         df.createOrReplaceTempView(name)
         out[name] = df

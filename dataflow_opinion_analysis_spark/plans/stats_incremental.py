@@ -43,24 +43,13 @@ def _p_sql_for_markers(markers: list[str]) -> str:
     )
 
 
-def daily_sql(name: str, p_sql: str) -> str:
-    if name == "stattopic":
-        return stats.stattopic_sql(p_sql)
-    if name == "statstoryimpact":
-        return stats.statstoryimpact_sql(p_sql)
-    raise KeyError(f"not a daily-snapshot table: {name}")
-
-
 def daily_df(spark: SparkSession, name: str, p_sql: str) -> DataFrame:
-    """Staged twin of ``spark.sql(daily_sql(name, p_sql))`` — identical
-    rows; the multi-referenced CTE (SentimentTags / s1) runs once per
-    refresh instead of once per reference (plans/stats.py staged
-    runners)."""
-    if name == "stattopic":
-        return stats.stattopic_df(spark, p_sql)
-    if name == "statstoryimpact":
-        return stats.statstoryimpact_df(spark, p_sql)
-    raise KeyError(f"not a daily-snapshot table: {name}")
+    """One daily table's rows for the SnapshotDateIds ``p_sql`` lists —
+    the full-range builder's staged rendering (stats.staged_df) with this
+    refresh's day list."""
+    if name not in DAILY_TABLES:
+        raise KeyError(f"not a daily-snapshot table: {name}")
+    return stats.staged_df(spark, name, p_sql)
 
 
 class DailyStatsStore:

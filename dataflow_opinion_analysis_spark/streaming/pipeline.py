@@ -3,12 +3,14 @@
     readStream(transcripts) -> withWatermark(ts)
       -> assemble_threads (keyed state: sessionized, turn_idx-ordered,
          parent links, late-data routing)
-      -> foreachBatch:
+      -> foreachBatch (process_batch):
            derive InputContent (stateless columns)
            exact dedupe      (in-batch window + cross-batch anti-join
                               against the durable content index on
                               content_hash — the table IS the dedupe
                               state store, so it survives restarts free)
+         then plans/indexer.index_after_exact_dedupe, the stages the
+         batch indexer runs after its exact dedupe:
            fused Arrow NLP   (tags appended in one narrow pass; strict
                               mode raises on poison docs and routes them
                               to the dead-letter MergeTable, K2/F5)
@@ -18,6 +20,7 @@
            entity enrichment (enrich_ratio fraction gets cnlp:: tags)
            fused passage fan-out (doc keys ride the Arrow stage — the
                               sentiment branch needs no join)
+         and back in process_batch:
            MERGE into webresource/document/sentiment MergeTables
            (exactly-once: committed batch-ids + key anti-join)
            append late-turn counts to a metrics table
@@ -44,8 +47,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataflow_opinion_analysis_spark import schemas
-from dataflow_opinion_analysis_spark.functions import scorer
-from dataflow_opinion_analysis_spark.operators import dedupe, fanout, ingest
+from dataflow_opinion_analysis_spark.operators import dedupe, ingest
+from dataflow_opinion_analysis_spark.plans.indexer import (
+    index_after_exact_dedupe,
+    vote_rule_verdicts,
+)
 from dataflow_opinion_analysis_spark.streaming import dedupe_state
 from dataflow_opinion_analysis_spark.sources.transcripts import read_transcripts_stream
 from dataflow_opinion_analysis_spark.tables.mergetable import (
@@ -114,7 +120,7 @@ class IndexerSinks:
     dead_letter: MergeTable
     fingerprints: MergeTable
     metrics_dir: str
-    # attached by run_indexer_stream when metrics_listener=True
+    # the query listener run_indexer_stream attaches
     query_metrics: object | None = None
 
     @classmethod
@@ -178,10 +184,16 @@ def process_batch(
     # derived frame must never orphan a persisted parent across
     # micro-batches (executor storage would grow until ContextCleaner GC)
     persisted: list[DataFrame] = []
-    # a columnar persist (see session.materialize for why not a
-    # checkpoint), materialized by the stats agg below
-    assembled = assembled.persist()
-    persisted.append(assembled)
+
+    def pin(df: DataFrame) -> DataFrame:
+        # a lazy columnar persist (see session.materialize for why not a
+        # checkpoint)
+        df = df.persist()
+        persisted.append(df)
+        return df
+
+    # materialized by the stats agg below
+    assembled = pin(assembled)
     stats = assembled.agg(
         F.count("*").alias("n_input"),
         F.sum(F.when(F.col("status") == "late", 1).otherwise(0)).alias("n_late"),
@@ -247,8 +259,7 @@ def process_batch(
     # anti-join and the dupe re-pointing join all key on content_hash, and
     # InMemoryTableScan preserves the cached outputPartitioning — so the
     # one exchange paid while building the cache replaces one per consumer
-    ic_keys = ic.select(*_key_cols).repartition(F.col("content_hash")).persist()
-    persisted.append(ic_keys)
+    ic_keys = pin(ic.select(*_key_cols).repartition(F.col("content_hash")))
     index_keys = ic_keys.filter(F.col("skip_indexing") == 0)
     skipped_keys = ic_keys.filter(F.col("skip_indexing") != 0)
 
@@ -276,23 +287,19 @@ def process_batch(
     # claims are also unique per hash because exact_dedupe winners are
     # row_number()==1 per content_hash).
     batch_hashes = index_keys.select("content_hash")
-    prior_claims = (
+    prior_claims = pin(
         sinks.content_index.read()
         .join(batch_hashes, "content_hash", "left_semi")
         .select("content_hash", "winner_document_hash")
-        .persist()
     )
-    persisted.append(prior_claims)
-    new_claims = (
+    new_claims = pin(
         inbatch_winners.select(
             "content_hash",
             F.col("expected_document_hash").alias("winner_document_hash"),
             "pub_date_id",
         )
         .join(prior_claims, "content_hash", "left_anti")
-        .persist()
     )
-    persisted.append(new_claims)
     # one cheap barrier materializes BOTH narrow claim caches (the anti
     # join scans prior_claims fully), so the store write below and the
     # routing joins read the caches — concurrently, without the
@@ -342,83 +349,36 @@ def process_batch(
         F.col("expected_document_hash") != F.col("winner_document_hash")
     )
 
-    # FUSED tag stage (same restructure as plans/indexer.py): one narrow
-    # Arrow pass appends (Tags, tag_names) to the wide winners — no token
-    # shuffles, no doc-sized tag join-back
-    winners = scorer.tags_augment(winners, strict=strict_scoring).persist()
-    persisted.append(winners)
+    if not soft_dedupe_enabled:
+        near_dupe_verdicts = None
+    elif cross_batch_near_dedupe:
+        # MinHash fingerprint semantics (in-batch sequential admit +
+        # durable cross-batch store) instead of the whole-batch vote
+        # rule — catches a near-dup arriving micro-batches later, which
+        # the per-batch vote rule cannot
+        def near_dupe_verdicts(w: DataFrame) -> DataFrame:
+            return dedupe_state.fingerprint_dedupe_batch(w, sinks.fingerprints, batch_id)
+    else:
+        near_dupe_verdicts = vote_rule_verdicts
+    out = index_after_exact_dedupe(
+        winners, exact_dupes, skipped_keys,
+        pin=pin, near_dupe_verdicts=near_dupe_verdicts,
+        enrich_ratio=enrich_ratio, strict_scoring=strict_scoring,
+        dead_letter_batch_id=int(batch_id), document_extra_cols=["content_hash"],
+    )
 
     n_failed = 0
     if strict_scoring:
         # K2/F5 failure routing: docs the NLP stage raised on reach ONLY
         # the dead-letter sink (reference side-output semantics)
-        failed = winners.filter(F.col("_index_error").isNotNull()).select(
-            "conv_id",
-            "turn_idx",
-            F.col("expected_document_hash").alias("document_hash"),
-            F.col("_index_error").alias("error"),
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-        )
-        n_failed = sinks.dead_letter.merge(failed, batch_id)
-        winners = winners.filter(F.col("_index_error").isNull()).drop("_index_error")
+        n_failed = sinks.dead_letter.merge(out.dead_letter, batch_id)
 
-    if soft_dedupe_enabled:
-        if cross_batch_near_dedupe:
-            # MinHash fingerprint semantics (in-batch sequential admit +
-            # durable cross-batch store) instead of the whole-batch vote
-            # rule — catches a near-dup arriving micro-batches later,
-            # which the per-batch vote rule cannot
-            dupe_verdicts = dedupe_state.fingerprint_dedupe_batch(
-                winners, sinks.fingerprints, batch_id
-            ).filter(F.col("is_dupe")).select(
-                F.col("document_hash"), "is_dupe", "winner_document_hash"
-            )
-        else:
-            verdict_input = winners.select(
-                "expected_document_hash", "conv_id", "turn_idx", "title",
-                F.length("text").alias("text_len"), "tag_names",
-            )
-            # only the dupe subset joins back (small side, broadcastable) —
-            # everything absent from it is trivially is_dupe=false
-            dupe_verdicts = dedupe.soft_dedupe(verdict_input).filter(F.col("is_dupe"))
-        routed2 = winners.join(
-            dupe_verdicts.select(
-                F.col("document_hash").alias("expected_document_hash"),
-                "is_dupe", "winner_document_hash",
-            ),
-            "expected_document_hash", "left",
-        )
-        soft_winners = routed2.filter(F.col("is_dupe").isNull()).drop(
-            "is_dupe", "winner_document_hash"
-        ).persist()
-        persisted.append(soft_winners)
-        soft_dupes = routed2.filter(F.col("is_dupe")).drop("is_dupe")
-    else:
-        soft_winners, soft_dupes = winners, None
-
-    if enrich_ratio > 0.0:
-        from dataflow_opinion_analysis_spark.functions import entities
-
-        soft_winners = entities.enrich_with_entities(
-            soft_winners, b_ratio=enrich_ratio, hash_col="expected_document_hash"
-        ).persist()
-        persisted.append(soft_winners)
-
-    # materialize the winners cache ONCE before deriving the sink frames:
-    # all three are Arrow fan-outs over it, and concurrent merge jobs
+    # materialize the pinned stages ONCE before the sink merges: the last
+    # pin is the most downstream (the soft/enriched winners), all three
+    # sink frames are Arrow fan-outs over it, and concurrent merge jobs
     # racing an unmaterialized cache each recompute the NLP chain for
     # partitions not yet stored.
-    soft_winners.count()
-
-    document = fanout.document_rows(soft_winners, extra_cols=["content_hash"])
-    # fused Arrow fan-out: passage rows carry the doc key fields — the
-    # sentiment branch is join-free and soft-dupes are never scored
-    sentiment = fanout.sentiment_rows_fused(soft_winners)
-    wr = fanout.webresource_rows(soft_winners)
-    wr = wr.unionByName(fanout.webresource_rows(exact_dupes, "winner_document_hash"))
-    wr = wr.unionByName(fanout.webresource_rows(skipped_keys))
-    if soft_dupes is not None:
-        wr = wr.unionByName(fanout.webresource_rows(soft_dupes, "winner_document_hash"))
+    persisted[-1].count()
 
     # the three sink merges are independent (different tables, different
     # manifest chains) — run them as concurrent Spark jobs so a micro-batch
@@ -449,9 +409,9 @@ def process_batch(
     # guard). This is the O(batch)-not-O(table) requirement: at 10^12
     # turns the sinks cannot re-scan their history every commit.
     with _futures.ThreadPoolExecutor(max_workers=3) as pool:
-        f_docs = pool.submit(sinks.document.merge, document, batch_id, assume_new=True)
-        f_sents = pool.submit(sinks.sentiment.merge, sentiment, batch_id, assume_new=True)
-        f_wr = pool.submit(sinks.webresource.merge, wr, batch_id, assume_new=True)
+        f_docs = pool.submit(sinks.document.merge, out.document, batch_id, assume_new=True)
+        f_sents = pool.submit(sinks.sentiment.merge, out.sentiment, batch_id, assume_new=True)
+        f_wr = pool.submit(sinks.webresource.merge, out.webresource, batch_id, assume_new=True)
         n_docs = f_docs.result()
         n_sents = f_sents.result()
         f_wr.result()
@@ -495,7 +455,6 @@ def run_indexer_stream(
     enrich_ratio: float = 0.0,
     strict_scoring: bool = False,
     cross_batch_near_dedupe: bool = False,
-    metrics_listener: bool = True,
     state_store: str = "hdfs",
     auto_compact_files: int = 64,
 ):
@@ -520,9 +479,9 @@ def run_indexer_stream(
     The setting is session-wide and read at query start, so it applies
     to queries started after this call.
 
-    ``metrics_listener=True`` (default) attaches the throughput /
-    watermark-lag listener (streaming/metrics.py): every micro-batch's
-    processedRowsPerSecond, duration, watermark and lag is appended to
+    The throughput / watermark-lag listener (streaming/metrics.py) is
+    always attached: every micro-batch's processedRowsPerSecond,
+    duration, watermark and lag is appended to
     ``<out_root>/query_metrics.jsonl``; the listener object is exposed as
     ``sinks.query_metrics`` for ``summary()``."""
     if state_store == "rocksdb":
@@ -539,13 +498,12 @@ def run_indexer_stream(
         )
     elif state_store != "hdfs":
         raise ValueError(f"unknown state_store {state_store!r} (hdfs|rocksdb)")
-    sinks = IndexerSinks.create(spark, out_root)
-    if metrics_listener:
-        from dataflow_opinion_analysis_spark.streaming import metrics as _metrics
+    from dataflow_opinion_analysis_spark.streaming import metrics as _metrics
 
-        sinks.query_metrics = _metrics.attach(
-            spark, os.path.join(out_root, "query_metrics.jsonl")
-        )
+    sinks = IndexerSinks.create(spark, out_root)
+    sinks.query_metrics = _metrics.attach(
+        spark, os.path.join(out_root, "query_metrics.jsonl")
+    )
     stream = read_transcripts_stream(spark, input_path, max_files_per_trigger)
     from dataflow_opinion_analysis_spark.streaming.threads import assemble_threads
 

@@ -57,20 +57,21 @@ def test_indexer_single_wide_exchanges(indexer_outputs):
     assert plan.count("Exchange hashpartitioning") <= 6, plan[:4000]
 
 
-def test_stats_plans_clean(spark):
+def test_stats_plans_clean(spark, monkeypatch):
     from dataflow_opinion_analysis_spark.plans import stats
     from dataflow_opinion_analysis_spark.plans.indexer import build_indexer
     from dataflow_opinion_analysis_spark.sources.transcripts import derive_transcripts
 
     out = build_indexer(derive_transcripts(spark, SF_DIR), persist=True)
     stats.register_views(spark, out.document, out.sentiment, out.webresource)
-    # chain views must exist for later tables' SQL to resolve; the guard
-    # explains the UNMATERIALIZED query for each table so the full join
-    # tree (not a checkpoint leaf) is inspected
+    # each table is planned by stats_df, as build_stats plans it, but with
+    # the staged heads left UNMATERIALIZED: a head's view then inlines
+    # into its tail's plan, so the full join tree, head included (not a
+    # checkpoint leaf), is inspected. Chain views must exist for later
+    # tables' SQL to resolve.
+    monkeypatch.setattr(stats, "materialize", lambda df, role: df)
     for name in stats.STATS_ORDER:
-        df = spark.sql(
-            stats.stats_sql(name, stats.GATE_MIN_DOMAIN_DOCS, stats.GATE_MIN_BASIC8)
-        )
+        df = stats.stats_df(spark, name, stats.GATE_MIN_DOMAIN_DOCS, stats.GATE_MIN_BASIC8)
         assert_clean(df, f"stats:{name}")
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
 

@@ -21,7 +21,6 @@ def stats_tables(spark):
     stats.register_views(spark, out.document, out.sentiment, out.webresource)
     return stats.build_stats(
         spark,
-        persist=True,
         domainopinions_min_docs=stats.GATE_MIN_DOMAIN_DOCS,
         domainopinions_min_basic8=stats.GATE_MIN_BASIC8,
     )
@@ -151,7 +150,6 @@ def test_durable_store_chain_equals_in_memory(spark, stats_tables, tmp_path_fact
     root = str(tmp_path_factory.mktemp("stats_store"))
     stored = stats.build_stats(
         spark,
-        persist=True,
         domainopinions_min_docs=stats.GATE_MIN_DOMAIN_DOCS,
         domainopinions_min_basic8=stats.GATE_MIN_BASIC8,
         checkpoint_facts=False,  # facts already checkpointed by the fixture
@@ -194,7 +192,6 @@ def test_social_counts_seam(spark, stats_tables, tmp_path_factory):
 
     injected = stats.build_stats(
         spark,
-        persist=True,
         domainopinions_min_docs=stats.GATE_MIN_DOMAIN_DOCS,
         domainopinions_min_basic8=stats.GATE_MIN_BASIC8,
         checkpoint_facts=False,
@@ -213,7 +210,6 @@ def test_social_counts_seam(spark, stats_tables, tmp_path_factory):
     )
     injected2 = stats.build_stats(
         spark,
-        persist=True,
         domainopinions_min_docs=stats.GATE_MIN_DOMAIN_DOCS,
         domainopinions_min_basic8=stats.GATE_MIN_BASIC8,
         checkpoint_facts=False,

@@ -52,17 +52,9 @@ def _no_flush(df, col="CollectionItemId"):
     return df.filter(~F.col(col).startswith("conv-flush"))
 
 
-def test_stream_matches_batch(spark, tmp_path):
-    """Strict 3-table equality, soft dedupe OFF in both modes (the soft
-    vote rule is whole-dataset-scoped by definition, so per-micro-batch
-    streaming can only approximate it — covered by the next test)."""
-    path = _gen(tmp_path)
-    _append_flush(spark, path)
-    sinks = _run_stream(spark, path, tmp_path / "out", tmp_path / "ckpt", soft=False)
-
-    tdf = spark.read.parquet(path)
-    batch = build_indexer(tdf, persist=True, soft_dedupe_enabled=False)
-
+def _assert_sinks_match_batch(sinks, batch):
+    """The stream's three sinks (flush sentinel rows removed) equal the
+    batch indexer's frames row for row."""
     for name, stream_df, batch_df, cmp_cols in [
         (
             "webresource",
@@ -78,6 +70,7 @@ def test_stream_matches_batch(spark, tmp_path):
             ["DocumentHash", "CollectionItemId", "Text", "ContentLength", "Title"],
         ),
         (
+            # the flush sentinel has no lexicon hits, so no sentiment row
             "sentiment",
             sinks.sentiment.read(),
             batch.sentiment,
@@ -87,11 +80,21 @@ def test_stream_matches_batch(spark, tmp_path):
     ]:
         a = normalize(stream_df.select(cmp_cols).toPandas())
         b = normalize(batch_df.select(cmp_cols).toPandas())
-        if name == "sentiment":
-            # drop flush sentinel (no lexicon hits -> none expected anyway)
-            pass
         assert len(a) == len(b), f"{name}: {len(a)} vs {len(b)}"
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
+def test_stream_matches_batch(spark, tmp_path):
+    """Strict 3-table equality, soft dedupe OFF in both modes (the soft
+    vote rule is whole-dataset-scoped by definition, so per-micro-batch
+    streaming can only approximate it — covered by the next test)."""
+    path = _gen(tmp_path)
+    _append_flush(spark, path)
+    sinks = _run_stream(spark, path, tmp_path / "out", tmp_path / "ckpt", soft=False)
+
+    tdf = spark.read.parquet(path)
+    batch = build_indexer(tdf, persist=True, soft_dedupe_enabled=False)
+    _assert_sinks_match_batch(sinks, batch)
 
 
 def test_late_turns_counted_not_sunk(spark, tmp_path):
@@ -254,7 +257,8 @@ def test_stream_matches_batch_enriched(spark, tmp_path):
 def test_dead_letter_routing(spark, tmp_path):
     """K2/F5: strict mode raises inside the NLP stage on poison documents
     (NUL byte) and routes exactly those to the dead-letter sink; every
-    other table excludes them; replaying the batch is a no-op."""
+    other table excludes them, and equals batch strict mode; replaying
+    the batch is a no-op."""
     from dataflow_opinion_analysis_spark.functions.scorer import POISON_PATTERN
 
     path = str(tmp_path / "t")
@@ -300,6 +304,7 @@ def test_dead_letter_routing(spark, tmp_path):
     assert list(sdl["turn_idx"]) == [2, 4]
     assert sinks.document.read().filter(
         F.col("Text").contains(POISON_PATTERN)).count() == 0
+    _assert_sinks_match_batch(sinks, out)
     # replay idempotence: merging the same batch again writes nothing
     first = sinks.dead_letter.read().count()
     import dataflow_opinion_analysis_spark.streaming.pipeline as sp
