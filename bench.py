@@ -91,7 +91,6 @@ def main() -> int:
     # dedupe off to match the batch headline's configuration)
     stream_tps = stream_steady_tps = stream_lag = stream_final_lag = None
     caughtup_lag = None
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         import shutil as _sh
 
@@ -111,13 +110,12 @@ def main() -> int:
         # one flush batch) beats trigger 32 by ~19% warm (24.2s vs 30.0s)
         # and trigger 32 beats 16 by ~1.4x — at 32 cores the per-batch
         # fixed cost (state-store harness, claim joins, sink merges)
-        # dominates, so fewer, fatter triggers win; state width 16 vs 32
-        # measured a wash, width stays pinned to one partition per core.
+        # dominates, so fewer, fatter triggers win. The stream runs at one
+        # state partition per core (session.start_stream).
         # The local[2]->local[8] scaling protocol keeps trigger 32: the
         # work trigger 64 removes is perfectly-scaling work, so it helps
         # wall but trims the measured efficiency margin (0.887 -> 0.851
         # informal warm steady, BENCH/BASELINE.md round-5 notes).
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
         t0 = time.perf_counter()
         q, sinks = run_indexer_stream(
             spark, sdata, os.path.join(sroot, "out"), os.path.join(sroot, "ckpt"),
@@ -180,8 +178,6 @@ def main() -> int:
         assert n_stream > 0
     except Exception as e:  # noqa: BLE001
         print(f"bench: streaming headline failed: {e}", file=sys.stderr)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
     total = round(sum(v for v in timings.values() if v >= 0), 3)
     print(

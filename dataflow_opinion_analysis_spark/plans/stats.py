@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from dataflow_opinion_analysis_spark.schemas import ST_COLUMNS
-from dataflow_opinion_analysis_spark.session import materialize
+from dataflow_opinion_analysis_spark.session import local_frame, materialize
 
 # window widths (reference constants)
 IMPACT_WINDOW_DAYS = 8     # statstoryimpact p2 INTERVAL 8 DAY
@@ -103,8 +103,10 @@ def register_views(
     if topic is None:
         from dataflow_opinion_analysis_spark.functions import lexicon
 
-        topic = spark.createDataFrame(
-            [(t, 1) for t in lexicon.TOPIC_BLOCKLIST], "Topic string, IsBlocked int"
+        topic = local_frame(
+            spark,
+            [(t, 1) for t in lexicon.TOPIC_BLOCKLIST],
+            "Topic string, IsBlocked int",
         )
     topic.createOrReplaceTempView("topic")
 

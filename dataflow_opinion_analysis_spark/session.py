@@ -6,13 +6,30 @@ UTC session timezone (oracle comparison against DuckDB), AQE on
 UDFs are pandas/Arrow-vectorized), shuffle partitions sized to cores
 for local mode (on a real cluster you'd leave 200+ and let AQE
 coalesce).
+
+Two shuffle widths:
+
+- batch width, ``max(8, 2 x cores)`` (``get_spark``): a batch stage has
+  rows enough to fill two task waves, and the spare wave absorbs skew.
+  One partition per core lost on the ``backfill`` benchmark at
+  local[4] (median 86.2 -> 79.1 turns/s, 3 of 4 pairs worse).
+- stream width, one partition per core (``start_stream``): a
+  micro-batch stage is a few rows per task, so its cost is the fixed
+  launch cost of each task, and a second wave doubles it for nothing.
+  Spark fixes a query's state width in its checkpoint at first start;
+  a restarted query keeps the width it started with.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.storagelevel import StorageLevel
 
 
@@ -108,3 +125,53 @@ def materialize(df: DataFrame, role: str) -> DataFrame:
     consumers lose the columnar cache scan (+55% batch wall measured).
     """
     return df.localCheckpoint(eager=True, storageLevel=_ROLE_LEVELS[role])
+
+
+def start_stream(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start ``fn`` as ``stream``'s foreachBatch sink (append mode).
+
+    Every streaming query in the engine starts here, at the stream width:
+    ``spark.sql.shuffle.partitions`` is ``defaultParallelism`` for the
+    ``start()`` call only, so each micro-batch stage runs one task wave.
+    Spark clones the session's config at ``start()``, so the caller's
+    session keeps its own width, and the query's micro-batches (the frame
+    ``fn`` receives and its ``sparkSession``) see the stream width. The
+    first micro-batch records the width in ``offsets/0``; a restart
+    from an existing checkpoint takes the width from there. A batch query
+    that another thread plans on the same session during ``start()``
+    would see the stream width too; no caller does."""
+    spark = stream.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return (
+            stream.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .start()
+        )
+    finally:
+        spark.conf.set(key, prev)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A small frame of ``rows`` built on the driver, running no Spark job.
+
+    ``spark.createDataFrame(<list>, schema)`` goes through a Python RDD:
+    even an empty list runs Spark jobs (measured 2.67 s cold, 0.76 s
+    warm at local[4]). An Arrow table becomes a local relation and
+    schedules no task."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

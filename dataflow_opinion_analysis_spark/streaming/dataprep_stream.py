@@ -46,6 +46,7 @@ from dataflow_opinion_analysis_spark.operators.dataprep_incremental import (
     DOCS_SCHEMA,
     IncrementalDataPrep,
 )
+from dataflow_opinion_analysis_spark.session import start_stream
 
 
 def process_dataprep_batch(
@@ -86,12 +87,7 @@ def run_dataprep_stream(
     def _fb(df: DataFrame, bid: int) -> None:
         process_dataprep_batch(df, bid, prep)
 
-    q = (
-        stream.writeStream.foreachBatch(_fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    return q, prep
+    return start_stream(stream, _fb, checkpoint_dir), prep
 
 
 def dataprep_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -52,6 +52,7 @@ from dataflow_opinion_analysis_spark.plans.indexer import (
     index_after_exact_dedupe,
     vote_rule_verdicts,
 )
+from dataflow_opinion_analysis_spark.session import start_stream
 from dataflow_opinion_analysis_spark.streaming import dedupe_state
 from dataflow_opinion_analysis_spark.sources.transcripts import read_transcripts_stream
 from dataflow_opinion_analysis_spark.tables.mergetable import (
@@ -460,6 +461,12 @@ def run_indexer_stream(
 ):
     """Start the streaming indexer; returns (query, sinks).
 
+    The query starts at one shuffle partition per core
+    (``session.start_stream``), whatever the session's batch width. That
+    is also the thread-state width, and Spark fixes it at the first start
+    of ``checkpoint_dir``: a restart from an existing checkpoint keeps the
+    width the query first started with, even on a different core count.
+
     ``auto_compact_files``: when the content index — the one sink that is
     RE-READ every micro-batch (claim derivation) — exceeds this many data
     files, fold its small files with MergeTable.compact_small_files()
@@ -523,10 +530,4 @@ def run_indexer_stream(
                     # surface out of foreachBatch and fail the stream
                     pass
 
-    q = (
-        assembled.writeStream.foreachBatch(_fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
-    return q, sinks
+    return start_stream(assembled, _fb, checkpoint_dir), sinks

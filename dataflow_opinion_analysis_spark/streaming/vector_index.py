@@ -40,6 +40,7 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from dataflow_opinion_analysis_spark.operators import similarity
+from dataflow_opinion_analysis_spark.session import start_stream
 from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
 
 CODES_SCHEMA = "vec_id bigint, cent_id bigint, codes_str string"
@@ -166,12 +167,7 @@ def run_vector_index_stream(
     def _fb(df: DataFrame, bid: int) -> None:
         process_vector_batch(df, bid, table, model)
 
-    q = (
-        stream.writeStream.foreachBatch(_fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    return q, table
+    return start_stream(stream, _fb, checkpoint_dir), table
 
 
 def vector_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

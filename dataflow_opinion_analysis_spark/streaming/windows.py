@@ -43,7 +43,7 @@ from dataflow_opinion_analysis_spark.operators.events_ops import (
     SLIDE_STEP_MIN,
     SLIDE_WINDOW,
 )
-from dataflow_opinion_analysis_spark.session import materialize
+from dataflow_opinion_analysis_spark.session import materialize, start_stream
 
 # stream == batch equivalence depends on every window constant coming
 # from the batch operator module — a locally re-declared copy could
@@ -316,13 +316,7 @@ def run_windowed_agg_table(
         frame = materialize(df, "shared")
         table.merge(frame, bid, assume_new=True)
 
-    q = (
-        sdf.writeStream.foreachBatch(_fb)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    return q, table
+    return start_stream(sdf, _fb, checkpoint), table
 
 
 def events_cagg_stream(spark, sf_dir: str) -> DataFrame:

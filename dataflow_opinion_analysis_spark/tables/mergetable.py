@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataflow_opinion_analysis_spark.session import local_frame
+
 
 def _ranges_add(ranges: list[list[int]], x: int) -> list[list[int]]:
     """Insert x into a sorted list of inclusive [lo, hi] ranges, merging
@@ -336,7 +338,7 @@ class MergeTable:
 
     def _empty(self) -> DataFrame:
         if self.schema is not None:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         raise ValueError(f"empty table {self.path} and no schema given")
 
     def read(

@@ -38,6 +38,21 @@ def duck():
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def spark_jobs(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     """Column-name-sorted, row-sorted, tz-naive frame for comparison —
     mirrors the driver's order-insensitive value compare."""

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
+from tests.conftest import spark_jobs
 
 
 def _mk(spark, tmp_path):
@@ -415,3 +416,20 @@ def test_lost_same_batch_commit_race_is_idempotent(spark, tmp_path):
     entry2 = {"batch_id": 7, "files": [], "rows": 0, "ts": 0.0}
     with pytest.raises(ConcurrentCommitError):
         t._commit_batch(t._next_snap(stale, stale["files"], entry2), 7)
+
+
+def test_empty_table_read_runs_no_job(spark, tmp_path):
+    """A table with no files reads as a driver-side local relation: the
+    read, and collecting it, schedule no Spark task."""
+    t = _mk(spark, tmp_path)
+    got = {}
+
+    def read_empty():
+        df = t.read()
+        got["rows"] = df.collect()
+        got["cols"] = df.columns
+        got["delta"] = t.incremental_read(0).collect()
+
+    assert spark_jobs(spark, read_empty) == 0
+    assert got["rows"] == [] and got["delta"] == []
+    assert got["cols"] == ["conv_id", "turn_idx", "v", "date_id"]

@@ -1,7 +1,8 @@
 """One Spark implementation per indexer and stats query: the streaming
 micro-batch runs the batch indexer's post-dedupe stages
-(plans/indexer.index_after_exact_dedupe) rather than a copy of them, and
-the staged stats tables keep no one-shot SQL twin."""
+(plans/indexer.index_after_exact_dedupe) rather than a copy of them, the
+staged stats tables keep no one-shot SQL twin, and every streaming query
+starts through session.start_stream."""
 
 from __future__ import annotations
 
@@ -52,3 +53,16 @@ def test_stats_keep_no_one_shot_twins():
             for t in node.targets if isinstance(t, ast.Name)
         }
         assert defined & DELETED_STATS_TWINS == set(), rel
+
+
+def test_streams_start_only_through_the_helper():
+    offenders = [
+        str(path.relative_to(PACKAGE))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "session.py"
+        and any(
+            isinstance(node, ast.Attribute) and node.attr == "writeStream"
+            for node in ast.walk(ast.parse(path.read_text()))
+        )
+    ]
+    assert offenders == []

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -364,3 +364,24 @@ def test_subset_consumer_does_not_starve_other_tables(spark, stats_tables, tmp_p
     stats.register_views(spark, doc, sent, wr)
     for name, df in stats_tables.items():
         df.createOrReplaceTempView(name)
+
+
+def test_topic_view_runs_no_job(spark, stats_tables):
+    """register_views builds the default topic table on the driver: the
+    registration and a read of the view schedule no Spark task."""
+    from dataflow_opinion_analysis_spark.functions import lexicon
+    from dataflow_opinion_analysis_spark.plans import stats
+
+    got = {}
+
+    def register():
+        # re-register the module fixture's views; only topic is rebuilt
+        stats.register_views(
+            spark, spark.table("document"), spark.table("sentiment"),
+            spark.table("webresource"),
+        )
+        got["topic"] = spark.table("topic").collect()
+
+    assert spark_jobs(spark, register) == 0
+    assert sorted(r.Topic for r in got["topic"]) == sorted(lexicon.TOPIC_BLOCKLIST)
+    assert {r.IsBlocked for r in got["topic"]} == {1}

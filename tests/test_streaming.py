@@ -511,6 +511,36 @@ def test_rocksdb_state_store(spark, tmp_path):
         )
 
 
+def test_stream_starts_at_one_partition_per_core(spark, tmp_path):
+    """A stream starts at one shuffle partition per core whatever the
+    session's batch width, records that width in its checkpoint's first
+    offset entry (where Spark takes the state width from on restart), and
+    leaves the caller's session width as it found it."""
+    import json
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    batch_width = str(cores + 3)
+    path = _gen(tmp_path, n_convs=6, avg_turns=4, n_files=1)
+    ckpt = tmp_path / "ckpt"
+    spark.conf.set(key, batch_width)
+    try:
+        q, _ = run_indexer_stream(
+            spark, path, str(tmp_path / "out"), str(ckpt),
+            watermark="5 minutes", soft_dedupe_enabled=False,
+        )
+        assert spark.conf.get(key) == batch_width
+        q.processAllAvailable()
+        q.stop()
+        assert spark.conf.get(key) == batch_width
+    finally:
+        spark.conf.set(key, prev)
+    # offsets/<n>: a version line, then the batch metadata JSON
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"][key] == str(cores)
+
+
 def test_redelivered_turns_emitted_once(spark, tmp_path):
     """At-least-once sources redeliver: the SAME turn versions arriving
     again in later files must not re-enter the sinks. This is the

@@ -346,3 +346,27 @@ def test_overflow_storm_keeps_every_emitted_fence_pair():
         f"{len(out2)} redelivered overflow versions re-admitted "
         f"(statuses: {out2['status'].unique().tolist() if len(out2) else []})"
     )
+
+
+def test_fence_hard_cap_fails_loudly(monkeypatch):
+    """A stalled watermark under a hot conversation grows the emitted
+    above-watermark fence by each call's overflow. Up to 10 x SEEN_CAP
+    pairs the fence keeps them all; one more raises, naming the
+    conversation, the count and the watermark, instead of growing state
+    without bound or evicting a fence pair."""
+    import pytest
+
+    from dataflow_opinion_analysis_spark.streaming import threads
+
+    monkeypatch.setattr(threads, "PENDING_CAP", 4)
+    monkeypatch.setattr(threads, "SEEN_CAP", 2)
+    wm = 1000 * US
+    st = FakeState(wm_ms=wm // 1000)
+    # 24 above-wm turns: 4 stay pending, 20 overflow = exactly the cap
+    out1 = _run(st, [(i, wm + (i + 1) * US) for i in range(24)])
+    assert (out1["status"] == "overflow").sum() == 20
+    # the watermark stalls: one more overflowed turn crosses the cap
+    with pytest.raises(RuntimeError) as err:
+        _run(st, [(100, wm + 100 * US)])
+    msg = str(err.value)
+    assert "'c1'" in msg and "21" in msg and str(wm) in msg
