@@ -10,7 +10,20 @@ chained stats-table DAG end to end:
 Every CTE here mirrors the same-named CTE of the reference query it ports
 (StatsCalcPipelineUtils.java; see plans/stats.py for the line map). The
 whole chain is ONE WITH-block (`full_chain`); DuckDB prunes unreferenced
-CTEs, so each gate query appends only its final SELECT.
+inlined CTEs, so each gate query appends only its final SELECT.
+
+The fact views (fct_document, fct_sentiment, fct_webresource) and the
+chained stats tables that later tables read (stattopic,
+statstoryimpact, statstoryrank, stattoptopic7d) are declared
+`AS MATERIALIZED`, relations that plans/stats.build_stats also
+materializes on the Spark side. DuckDB 1.0 otherwise inlines every
+reference to a CTE, indexer prefix included, so the plans of the gates at
+the end of the chain hold dozens of copies of it; DuckDB reserves buffers
+per operator and per thread, and at sf0.001 on 4 threads stattopstory7d
+and stattoptopic7dsentiment ran out of memory (12.5 GiB). Materializing
+changes the plan shape only, not the rows. DuckDB 1.0 does not prune an
+unreferenced MATERIALIZED CTE, so every gate computes those seven once:
+about a second per gate at sf0.001 on 4 threads, under 1 GB RSS.
 
 Dialect bridges: sort_array(collect_set) <-> list_sort(list(DISTINCT)),
 LATERAL VIEW explode <-> comma-unnest, sequence <-> generate_series,
@@ -49,7 +62,7 @@ def facts_prefix() -> str:
     return (
         oracles.indexer_prefix()
         + f""",
-fct_document AS (
+fct_document AS MATERIALIZED (
   SELECT expected_document_hash AS DocumentHash,
          pub_time AS PublicationTime, pub_date_id AS PublicationDateId,
          document_collection_id AS DocumentCollectionId,
@@ -58,7 +71,7 @@ fct_document AS (
          text AS Text
   FROM soft_winners
 ),
-fct_sentiment AS (
+fct_sentiment AS MATERIALIZED (
   SELECT
     sha256(p.document_hash || {SEP} || cast(p.passage_idx AS varchar)
            || {SEP} || p.passage_text)  AS SentimentHash,
@@ -75,7 +88,7 @@ fct_sentiment AS (
   FROM passages p
   JOIN soft_winners w ON w.expected_document_hash = p.document_hash
 ),
-fct_webresource AS (
+fct_webresource AS MATERIALIZED (
 {wr_base.format(dochash="expected_document_hash", src="soft_winners")}
   UNION ALL
 {wr_base.format(dochash="winner_document_hash", src="exact_dupes")}
@@ -183,7 +196,7 @@ CalcStatCombiTopics AS (
   JOIN fct_webresource wrRepost ON wrRepost.DocumentHash = d.DocumentHash
   GROUP BY stc.SnapshotDateId, stc.Tag1, stc.Tag2
 ),
-stattopic AS (
+stattopic AS MATERIALIZED (
   SELECT SnapshotDateId, Topic, Tags, TagCount, cntOrigPublishers, cntRepostWRs,
          cntPositives, cntNegatives, cntAmbiguous, cntGeneral,
          SentimentHashes, OrigWebResourceHashes, RepostWebResourceHashes
@@ -226,7 +239,7 @@ imp_s4 AS (
          cast(sum(cntFb) AS bigint) AS cntFb
   FROM imp_s3 GROUP BY 1, 2, 3, 4
 ),
-statstoryimpact AS (
+statstoryimpact AS MATERIALIZED (
   SELECT s2.SnapshotDateId, s2.DocumentHash, s2.DocumentCollectionId, s2.CollectionItemId,
          s2.cntWRs, s2.cntDomains, s4.cntFb, s2.Domains, s2.Urls
   FROM imp_s2 s2 JOIN imp_s4 s4
@@ -329,7 +342,7 @@ rk_s2 AS (
   ORDER BY max(impact.cntFb + impact.cntWRs) DESC NULLS LAST, s1.DocumentHash
   LIMIT {stats_plans.TOP_STORY_LIMIT}
 ),
-statstoryrank AS (
+statstoryrank AS MATERIALIZED (
   SELECT s1.DocumentHash, s1.PublicationDateId, s1.PubMonth, s1.PubWeek,
          s1.Title, s1.Url, s1.Domain, s1.Author,
     rank() OVER (PARTITION BY s1.PubWeek  ORDER BY impact.cntFb DESC NULLS LAST, impact.cntWRs DESC) AS rankWeekly,
@@ -372,7 +385,7 @@ tt7d AS (
 tt7dtop20 AS (
   SELECT * FROM tt7d ORDER BY CycleTopicDominance DESC, Topic LIMIT 20
 ),
-stattoptopic7d AS (
+stattoptopic7d AS MATERIALIZED (
   SELECT tt2.SnapshotDateId, tt2.Topic, tt2.Tags, tt2.TagCount,
          tt2.cntOrigPublishers, tt2.cntRepostWRs,
          tt2.cntPositives, tt2.cntNegatives, tt2.cntAmbiguous, tt2.cntGeneral,
@@ -464,7 +477,7 @@ def full_chain(min_docs: int, min_basic8: float) -> str:
 
 
 # final gate SELECTs (column names match the Spark gate projections;
-# DuckDB prunes the unreferenced chain CTEs per query)
+# DuckDB prunes the unreferenced inlined chain CTEs per query)
 GATE_SELECTS: dict[str, str] = {
     "wrsocialcount_derived": """
 SELECT WebResourceHash, WrPublicationDateId, CountTime,

@@ -8,12 +8,13 @@ Usage: python scripts/drive_contract.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
