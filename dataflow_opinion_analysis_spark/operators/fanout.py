@@ -40,15 +40,13 @@ def webresource_rows(input_content: DataFrame, document_hash_col: str = "expecte
     )
 
 
-def document_rows(winners_with_tags: DataFrame, extra_cols: list[str] | None = None) -> DataFrame:
+def document_rows(winners_with_tags: DataFrame) -> DataFrame:
     """One document row per unique indexed text (IndexerPipeline.java:709-736).
 
     Type: SHORTTEXT when < 400 chars else ARTICLE (the reference takes this
-    from the content-type option; we derive it deterministically).
-
-    ``extra_cols`` are passed through verbatim (the streaming sink appends
-    ``content_hash`` so the document table doubles as the cross-batch
-    exact-dedupe index — no join-back needed)."""
+    from the content-type option; we derive it deterministically). Batch
+    and stream write the same rows; the stream's cross-batch exact dedupe
+    reads its own content index, not this table."""
     return winners_with_tags.select(
         F.col("expected_document_hash").alias("DocumentHash"),
         F.col("pub_time").alias("PublicationTime"),
@@ -69,7 +67,6 @@ def document_rows(winners_with_tags: DataFrame, extra_cols: list[str] | None = N
         F.col("web_resource_hash").alias("MainWebResourceHash"),
         F.col("parent_web_resource_hash").alias("ParentWebResourceHash"),
         F.col("Tags"),
-        *[F.col(c) for c in (extra_cols or [])],
     )
 
 

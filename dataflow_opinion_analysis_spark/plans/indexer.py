@@ -135,7 +135,6 @@ def index_after_exact_dedupe(
     enrich_ratio: float,
     strict_scoring: bool,
     dead_letter_batch_id: int | None = None,
-    document_extra_cols: list[str] | None = None,
 ) -> IndexerOutputs:
     """Every stage after exact dedupe, for batch and stream alike.
 
@@ -145,14 +144,13 @@ def index_after_exact_dedupe(
 
     - ``pin``: how a stage is held — batch materializes it ("shared"),
       the stream persists it lazily for release at the end of its batch.
-      Applied to the tagged winners, the soft winners and the enriched
-      winners.
+      Applied to the tagged winners, the soft-dedupe routed winners and
+      the enriched winners.
     - ``near_dupe_verdicts``: winners -> (document_hash, is_dupe,
       winner_document_hash) verdicts; ``vote_rule_verdicts`` or the
       stream's durable fingerprint store. None skips soft dedupe.
     - ``dead_letter_batch_id``: the ``batch_id`` of the dead-letter rows
       (NULL in batch).
-    - ``document_extra_cols``: passed through onto the document rows.
     """
     # FUSED tag stage: one narrow Arrow pass appends (Tags, tag_names) to
     # the full winners frame — no token shuffles, no doc-sized join-back.
@@ -180,9 +178,11 @@ def index_after_exact_dedupe(
         # is_dupe=false for every other doc, and the dupe subset is a
         # small fraction of the corpus, so Catalyst/AQE can broadcast it
         # instead of shuffling the wide winners frame (at fact scale it
-        # degrades gracefully to a shuffle join of a much smaller side)
+        # degrades gracefully to a shuffle join of a much smaller side).
+        # Pinned once: the soft winners and the soft dupes both read it,
+        # so the verdicts are evaluated once.
         dupe_verdicts = near_dupe_verdicts(winners).filter(F.col("is_dupe"))
-        routed = winners.join(
+        routed = pin(winners.join(
             dupe_verdicts.select(
                 F.col("document_hash").alias("expected_document_hash"),
                 "is_dupe",
@@ -190,11 +190,9 @@ def index_after_exact_dedupe(
             ),
             "expected_document_hash",
             "left",
-        )
-        soft_winners = pin(
-            routed.filter(F.col("is_dupe").isNull()).drop(
-                "is_dupe", "winner_document_hash"
-            )
+        ))
+        soft_winners = routed.filter(F.col("is_dupe").isNull()).drop(
+            "is_dupe", "winner_document_hash"
         )
         soft_dupes = routed.filter(F.col("is_dupe")).drop("is_dupe")
 
@@ -223,7 +221,7 @@ def index_after_exact_dedupe(
         )
     return IndexerOutputs(
         webresource=webresource,
-        document=fanout.document_rows(soft_winners, extra_cols=document_extra_cols),
+        document=fanout.document_rows(soft_winners),
         # fused Arrow fan-out carries the doc key fields onto each passage
         # row — the sentiment branch is join-free, and soft-dupe docs are
         # never scored at all

@@ -11,6 +11,11 @@ vs max input ts per micro-batch"): running max of the per-batch
 (now - watermark) is recorded beside it but is meaningless on synthetic
 corpora whose event timestamps are historical. ``summary()`` aggregates
 the run.
+
+The listener records only the query run it was attached for, the first
+one started after ``attach``. Turns that Spark's watermark filter drops
+before they reach the thread assembler (``numRowsDroppedByWatermark``)
+are appended to the per-batch metrics directory as ``n_late``.
 """
 
 from __future__ import annotations
@@ -18,8 +23,39 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
+import uuid
 
 from pyspark.sql.streaming import StreamingQueryListener
+
+METRICS_SCHEMA = (
+    "batch_id long, n_input long, n_ok long, n_late long, n_overflow long, "
+    "n_exact_dupes long, n_soft_dupes long, n_documents long, n_sentiments long, "
+    "max_event_ts timestamp"
+)
+
+
+def write_batch_row(metrics_dir: str, *, max_event_ts, **counts) -> None:
+    """Append one per-batch metrics row as a parquet file, written
+    driver-side with pyarrow: the row is driver-local lineage data and a
+    distributed write job for a single row is pure scheduler overhead.
+    Readable by ``spark.read.parquet(metrics_dir)`` (tests do exactly
+    that) — column set mirrors METRICS_SCHEMA."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(metrics_dir, exist_ok=True)
+    cols = {k: pa.array([v], type=pa.int64()) for k, v in counts.items()}
+    # tz-aware (isAdjustedToUTC=true) to match rows a Spark TimestampType
+    # writer would produce — a resumed out_root must not mix LTZ and NTZ
+    # files in one directory (read fails or shifts depending on
+    # spark.sql.parquet.inferTimestampNTZ)
+    cols["max_event_ts"] = pa.array(
+        [max_event_ts], type=pa.timestamp("us", tz="UTC")
+    )
+    table = pa.table(cols)
+    tmp = os.path.join(metrics_dir, f".tmp-{uuid.uuid4().hex}.parquet")
+    pq.write_table(table, tmp)
+    os.rename(tmp, os.path.join(metrics_dir, f"part-{uuid.uuid4().hex}.parquet"))
 
 
 def _parse_ts(s: str | None) -> _dt.datetime | None:
@@ -32,18 +68,34 @@ def _parse_ts(s: str | None) -> _dt.datetime | None:
 
 
 class ThroughputListener(StreamingQueryListener):
-    def __init__(self, out_path: str | None = None):
+    def __init__(self, out_path: str | None = None, metrics_dir: str | None = None):
         self.out_path = out_path
+        self.metrics_dir = metrics_dir
+        # a run, not the query id: a restart from the same checkpoint keeps
+        # the id, and two listeners must not both count its late turns
+        self.run_id: str | None = None
         self.rows: list[dict] = []
         self._max_event_ts: _dt.datetime | None = None
         if out_path:
             os.makedirs(os.path.dirname(out_path), exist_ok=True)
 
     def onQueryStarted(self, event):  # noqa: N802
-        pass
+        # Spark posts a query's start event to listeners before any of its
+        # progress events
+        if self.run_id is None:
+            self.run_id = str(event.runId)
 
     def onQueryProgress(self, event):  # noqa: N802
         p = event.progress
+        if str(p.runId) != self.run_id:
+            return
+        dropped = sum(s.numRowsDroppedByWatermark for s in p.stateOperators or [])
+        if dropped and self.metrics_dir:
+            write_batch_row(
+                self.metrics_dir, batch_id=p.batchId, n_input=0, n_ok=0,
+                n_late=dropped, n_overflow=0, n_exact_dupes=0, n_soft_dupes=0,
+                n_documents=0, n_sentiments=0, max_event_ts=None,
+            )
         et = p.eventTime or {}
         wm = _parse_ts(et.get("watermark"))
         if wm is not None and wm.timestamp() == 0:
@@ -157,7 +209,10 @@ class ThroughputListener(StreamingQueryListener):
         }
 
 
-def attach(spark, out_path: str | None = None) -> ThroughputListener:
-    lst = ThroughputListener(out_path)
+def attach(
+    spark, out_path: str | None = None, metrics_dir: str | None = None
+) -> ThroughputListener:
+    """Listen for the next query started on ``spark``."""
+    lst = ThroughputListener(out_path, metrics_dir)
     spark.streams.addListener(lst)
     return lst

@@ -20,8 +20,9 @@
            entity enrichment (enrich_ratio fraction gets cnlp:: tags)
            fused passage fan-out (doc keys ride the Arrow stage — the
                               sentiment branch needs no join)
-         and back in process_batch:
-           MERGE into webresource/document/sentiment MergeTables
+         and back in process_batch, one write group:
+           MERGE into the content index, webresource/document/sentiment
+           (and the dead letter in strict mode) MergeTables
            (exactly-once: committed batch-ids + key anti-join)
            append late-turn counts to a metrics table
 
@@ -40,8 +41,7 @@ from __future__ import annotations
 
 import concurrent.futures as _futures
 import os
-import uuid as _uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,16 +53,9 @@ from dataflow_opinion_analysis_spark.plans.indexer import (
     vote_rule_verdicts,
 )
 from dataflow_opinion_analysis_spark.session import start_stream
-from dataflow_opinion_analysis_spark.streaming import dedupe_state
+from dataflow_opinion_analysis_spark.streaming import dedupe_state, metrics
 from dataflow_opinion_analysis_spark.sources.transcripts import read_transcripts_stream
-from dataflow_opinion_analysis_spark.tables.mergetable import (
-    ConcurrentCommitError,
-    MergeTable,
-)
-
-# extra column on the document sink: the exact-dedupe content hash, so
-# later micro-batches can anti-join against everything already indexed
-DOCUMENT_SINK_SCHEMA = schemas.DOCUMENT.add("content_hash", "string")
+from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
 
 # per-batch routing-map broadcast ceiling (rows ~ 200B each in the build
 # hashmap => ~400MB at the default; raise/lower via env for deployments
@@ -70,13 +63,6 @@ DOCUMENT_SINK_SCHEMA = schemas.DOCUMENT.add("content_hash", "string")
 _BROADCAST_MAPPING_MAX_ROWS = int(
     os.environ.get("SPARK_GRAFT_BROADCAST_MAPPING_MAX_ROWS", "2000000")
 )
-
-METRICS_SCHEMA = (
-    "batch_id long, n_input long, n_ok long, n_late long, n_overflow long, "
-    "n_exact_dupes long, n_soft_dupes long, n_documents long, n_sentiments long, "
-    "max_event_ts timestamp"
-)
-
 
 # durable keyed dedupe state: first winner per content hash. Lives as a
 # MergeTable (not the document sink) because a winner eliminated later by
@@ -86,30 +72,6 @@ METRICS_SCHEMA = (
 CONTENT_INDEX_SCHEMA = (
     "content_hash string, winner_document_hash string, pub_date_id int"
 )
-
-
-def _write_metrics_row(metrics_dir: str, *, max_event_ts, **counts) -> None:
-    """Append one per-batch metrics row as a parquet file, written
-    driver-side with pyarrow: the row is driver-local lineage data and a
-    distributed write job for a single row is pure scheduler overhead.
-    Readable by ``spark.read.parquet(metrics_dir)`` (tests do exactly
-    that) — column set mirrors METRICS_SCHEMA."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(metrics_dir, exist_ok=True)
-    cols = {k: pa.array([v], type=pa.int64()) for k, v in counts.items()}
-    # tz-aware (isAdjustedToUTC=true) to match rows a Spark TimestampType
-    # writer would produce — a resumed out_root must not mix LTZ and NTZ
-    # files in one directory (read fails or shifts depending on
-    # spark.sql.parquet.inferTimestampNTZ)
-    cols["max_event_ts"] = pa.array(
-        [max_event_ts], type=pa.timestamp("us", tz="UTC")
-    )
-    table = pa.table(cols)
-    tmp = os.path.join(metrics_dir, f".tmp-{_uuid.uuid4().hex}.parquet")
-    pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(metrics_dir, f"part-{_uuid.uuid4().hex}.parquet"))
 
 
 @dataclass
@@ -134,7 +96,7 @@ class IndexerSinks:
             ),
             document=MergeTable(
                 spark, os.path.join(root, "document"),
-                key_cols=["DocumentHash"], schema=DOCUMENT_SINK_SCHEMA,
+                key_cols=["DocumentHash"], schema=schemas.DOCUMENT,
                 partition_col="PublicationDateId",
             ),
             sentiment=MergeTable(
@@ -162,6 +124,13 @@ class IndexerSinks:
             metrics_dir=os.path.join(root, "metrics"),
         )
 
+    def on(self, spark: SparkSession) -> "IndexerSinks":
+        """The same sinks, their reads planned on ``spark``."""
+        return replace(self, **{
+            f.name: getattr(self, f.name).on(spark) for f in fields(self)
+            if isinstance(getattr(self, f.name), MergeTable)
+        })
+
 
 def process_batch(
     assembled: DataFrame,
@@ -179,7 +148,22 @@ def process_batch(
     ``enrich_ratio``: N2 entity-enrichment fraction (reference streaming
     default is 1.0, IndexerPipelineUtils.java:395-398; kept 0.0 here so
     the stream==batch equivalence tests stay enrichment-free unless both
-    sides opt in)."""
+    sides opt in).
+
+    Every sink read plans on ``assembled.sparkSession``, the micro-batch's
+    own session at the stream width (``session.start_stream``): a table
+    built on the caller's session would plan the claim and fingerprint
+    reads, and every join that starts from them, at the caller's width."""
+    sinks = sinks.on(assembled.sparkSession)
+    # the batch's sink writes, one list. The empty batch fences the same
+    # tables, plus the fingerprint store, which fingerprint_dedupe_batch
+    # writes itself.
+    written = ["content_index", "document", "sentiment", "webresource"]
+    if strict_scoring:
+        # K2/F5 failure routing: docs the NLP stage raised on reach ONLY
+        # the dead-letter sink (reference side-output semantics)
+        written.append("dead_letter")
+
     # every persist is recorded here and released at the end of the batch
     # regardless of which flag branches were taken — rebinding a name to a
     # derived frame must never orphan a persisted parent across
@@ -216,15 +200,12 @@ def process_batch(
         # re-batch the same files under shifted ids, and the fence only
         # holds if the live run left no id gaps
         # (tests/test_streaming.py::test_exactly_once_replay).
-        fenced = [sinks.content_index, sinks.document,
-                  sinks.sentiment, sinks.webresource]
-        if strict_scoring:
-            fenced.append(sinks.dead_letter)
+        fenced = list(written)
         if soft_dedupe_enabled and cross_batch_near_dedupe:
-            fenced.append(sinks.fingerprints)
-        for t in fenced:
-            t.record_empty(batch_id)
-        _write_metrics_row(
+            fenced.append("fingerprints")
+        for name in fenced:
+            getattr(sinks, name).record_empty(batch_id)
+        metrics.write_batch_row(
             sinks.metrics_dir, batch_id=int(batch_id), n_input=0, n_ok=0,
             n_late=0, n_overflow=0, n_exact_dupes=0, n_soft_dupes=0,
             n_documents=0, n_sentiments=0, max_event_ts=stats.max_ts,
@@ -286,7 +267,8 @@ def process_batch(
     # surviving claims are genuinely new rows, so the merge takes the
     # assume_new fast path (one narrow write job, no table re-scan; the
     # claims are also unique per hash because exact_dedupe winners are
-    # row_number()==1 per content_hash).
+    # row_number()==1 per content_hash). Routing reads the cached claim
+    # frames, not the store, so the store write joins the write group.
     batch_hashes = index_keys.select("content_hash")
     prior_claims = pin(
         sinks.content_index.read()
@@ -301,24 +283,6 @@ def process_batch(
         )
         .join(prior_claims, "content_hash", "left_anti")
     )
-    # one cheap barrier materializes BOTH narrow claim caches (the anti
-    # join scans prior_claims fully), so the store write below and the
-    # routing joins read the caches — concurrently, without the
-    # double-compute race an unmaterialized persist invites
-    new_claims.count()
-    # the content-index write is off the critical path: routing uses the
-    # cached claim frames, not the store, so the narrow write job overlaps
-    # the tag/fan-out compute below; joined before the metrics commit
-    # (and on any failure path) so exactly-once ordering is unchanged.
-    _ci_pool = _futures.ThreadPoolExecutor(max_workers=1)
-    ci_future = _ci_pool.submit(
-        sinks.content_index.merge, new_claims, batch_id, assume_new=True
-    )
-    # shut down IMMEDIATELY (wait=False): the worker finishes the one
-    # submitted merge then exits, so a failure on any path below cannot
-    # leak a live thread per failed batch; ci_future.result() below is
-    # unaffected.
-    _ci_pool.shutdown(wait=False)
     # Routing map = prior claims ∪ this batch's claims — identical to
     # re-reading the post-merge index (every batch hash has a winner:
     # previously claimed hashes are in prior_claims, the rest have an
@@ -365,27 +329,27 @@ def process_batch(
         winners, exact_dupes, skipped_keys,
         pin=pin, near_dupe_verdicts=near_dupe_verdicts,
         enrich_ratio=enrich_ratio, strict_scoring=strict_scoring,
-        dead_letter_batch_id=int(batch_id), document_extra_cols=["content_hash"],
+        dead_letter_batch_id=int(batch_id),
     )
-
-    n_failed = 0
-    if strict_scoring:
-        # K2/F5 failure routing: docs the NLP stage raised on reach ONLY
-        # the dead-letter sink (reference side-output semantics)
-        n_failed = sinks.dead_letter.merge(out.dead_letter, batch_id)
+    frames = {
+        "content_index": new_claims, "document": out.document,
+        "sentiment": out.sentiment, "webresource": out.webresource,
+        "dead_letter": out.dead_letter,
+    }
 
     # materialize the pinned stages ONCE before the sink merges: the last
-    # pin is the most downstream (the soft/enriched winners), all three
-    # sink frames are Arrow fan-outs over it, and concurrent merge jobs
-    # racing an unmaterialized cache each recompute the NLP chain for
-    # partitions not yet stored.
+    # pin is the most downstream (the soft-dedupe routed or enriched
+    # winners), every sink frame reads it or the claim caches it was
+    # routed through, and concurrent merge jobs racing an unmaterialized
+    # cache each recompute the NLP chain for partitions not yet stored.
     persisted[-1].count()
 
-    # the three sink merges are independent (different tables, different
+    # the sink merges are independent (different tables, different
     # manifest chains) — run them as concurrent Spark jobs so a micro-batch
     # pays max(merge walls), not their sum. Threads are the idiomatic way
     # to submit concurrent jobs from one driver; each merge's commit is
-    # still atomic per table.
+    # still atomic per table. Leaving the block joins every thread, so a
+    # failed merge fails the batch with no write still running.
     #
     # assume_new: each fact-table merge is ONE narrow write job — no
     # in-batch dropDuplicates shuffle, no bounds job, no anti-join scan
@@ -408,28 +372,23 @@ def process_batch(
     # test_redelivered_turns_emitted_once); merge() itself still
     # raises pre-commit on a gross uniqueness violation (Observation
     # guard). This is the O(batch)-not-O(table) requirement: at 10^12
-    # turns the sinks cannot re-scan their history every commit.
-    with _futures.ThreadPoolExecutor(max_workers=3) as pool:
-        f_docs = pool.submit(sinks.document.merge, out.document, batch_id, assume_new=True)
-        f_sents = pool.submit(sinks.sentiment.merge, out.sentiment, batch_id, assume_new=True)
-        f_wr = pool.submit(sinks.webresource.merge, out.webresource, batch_id, assume_new=True)
-        n_docs = f_docs.result()
-        n_sents = f_sents.result()
-        f_wr.result()
-    # join the overlapped content-index write before the metrics commit:
-    # its failure must fail the batch. If an exception above skips this
-    # join, the orphaned thread finishes its own atomic commit in the
-    # background; should it stall past a restart that advances the table,
-    # its late commit raises ConcurrentCommitError inside the abandoned
-    # future (MergeTable._commit's parent check) instead of renaming the
-    # pointer backward over later batches' commits.
-    ci_future.result()
+    # turns the sinks cannot re-scan their history every commit. The
+    # dead letter keeps the full merge.
+    with _futures.ThreadPoolExecutor(max_workers=len(written)) as pool:
+        futures = {
+            name: pool.submit(getattr(sinks, name).merge, frames[name], batch_id,
+                              assume_new=name != "dead_letter")
+            for name in written
+        }
+        rows = {name: f.result() for name, f in futures.items()}
+    n_docs, n_sents = rows["document"], rows["sentiment"]
+    n_failed = rows.get("dead_letter", 0)
 
     max_ts = stats.max_ts
     # dupe counts are diagnostics only; -1 when skipped (recomputing them
     # would re-run the scorer chain)
     n_exact, n_soft = -1, -1
-    _write_metrics_row(
+    metrics.write_batch_row(
         sinks.metrics_dir, batch_id=int(batch_id), n_input=int(n_input),
         n_ok=int(n_input - n_late - n_overflow), n_late=int(n_late),
         n_overflow=int(n_overflow), n_exact_dupes=int(n_exact),
@@ -490,7 +449,9 @@ def run_indexer_stream(
     always attached: every micro-batch's processedRowsPerSecond,
     duration, watermark and lag is appended to
     ``<out_root>/query_metrics.jsonl``; the listener object is exposed as
-    ``sinks.query_metrics`` for ``summary()``."""
+    ``sinks.query_metrics`` for ``summary()``. Turns Spark's watermark
+    filter drops before the thread assembler sees them are counted as
+    ``n_late`` in ``sinks.metrics_dir``."""
     if state_store == "rocksdb":
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
@@ -505,11 +466,9 @@ def run_indexer_stream(
         )
     elif state_store != "hdfs":
         raise ValueError(f"unknown state_store {state_store!r} (hdfs|rocksdb)")
-    from dataflow_opinion_analysis_spark.streaming import metrics as _metrics
-
     sinks = IndexerSinks.create(spark, out_root)
-    sinks.query_metrics = _metrics.attach(
-        spark, os.path.join(out_root, "query_metrics.jsonl")
+    sinks.query_metrics = metrics.attach(
+        spark, os.path.join(out_root, "query_metrics.jsonl"), sinks.metrics_dir
     )
     stream = read_transcripts_stream(spark, input_path, max_files_per_trigger)
     from dataflow_opinion_analysis_spark.streaming.threads import assemble_threads
@@ -522,12 +481,6 @@ def run_indexer_stream(
         if auto_compact_files:
             ci = sinks.content_index
             if len(ci.current_snapshot()["files"]) >= auto_compact_files:
-                try:
-                    ci.compact_small_files(min_files=2)
-                except ConcurrentCommitError:
-                    # pure maintenance, safely retryable next trigger: a
-                    # stale orphaned merge thread's late commit must not
-                    # surface out of foreachBatch and fail the stream
-                    pass
+                ci.compact_small_files(min_files=2)
 
     return start_stream(assembled, _fb, checkpoint_dir), sinks

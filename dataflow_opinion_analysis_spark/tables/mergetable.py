@@ -44,6 +44,7 @@ Scale design:
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import shutil
@@ -91,18 +92,17 @@ def _ranges_contains(ranges: list[list[int]], x: int) -> bool:
 
 class ConcurrentCommitError(RuntimeError):
     """A commit whose parent snapshot is no longer LATEST — the table
-    advanced under the writer (stale overlapped thread, concurrent
+    advanced under the writer (a stalled writer, concurrent
     maintenance). The attempted manifest is discarded; any data files it
     wrote are unreferenced orphans for vacuum()."""
 
 
 # The commit critical section must be shared by EVERY writer of a table
 # path, not one MergeTable instance: a query restart builds new instances
-# over the same path while an orphaned merge thread may still hold the
-# old one. In-process that means a path-keyed lock registry; across
-# processes (driver restart racing an orphan of the old driver) an
-# advisory flock on a lockfile in the manifest dir covers the
-# check+rename window.
+# over the same path, and ``on`` copies an instance per micro-batch.
+# In-process that means a path-keyed lock registry; across processes
+# (driver restart racing a writer of the old driver) an advisory flock
+# on a lockfile in the manifest dir covers the check+rename window.
 _COMMIT_LOCKS: dict[str, threading.Lock] = {}
 _COMMIT_LOCKS_GUARD = threading.Lock()
 
@@ -134,6 +134,14 @@ class MergeTable:
         # serializes the commit parent-check + pointer rename (_commit)
         # across ALL instances on this path (see _commit_lock_for)
         self._commit_lock = _commit_lock_for(path)
+
+    def on(self, spark: SparkSession) -> "MergeTable":
+        """This table with its reads planned on ``spark`` (same path, same
+        commit lock). A streaming micro-batch plans on its own session,
+        whose width the query fixed at start, not on the caller's."""
+        t = copy.copy(self)
+        t.spark = spark
+        return t
 
     # -- manifest chain ----------------------------------------------------
     def _latest_path(self) -> str:
@@ -197,9 +205,7 @@ class MergeTable:
         read snapshot v, stalled (GC pause, slow job), and tries to
         commit v+1 after other commits advanced LATEST past v would
         otherwise rename the pointer BACKWARD, erasing every later
-        commit's rows and replay fences from the table (the streaming
-        sinks overlap one merge thread with the batch — a failed batch
-        can orphan that thread mid-commit). Such a commit now raises
+        commit's rows and replay fences from the table. Such a commit raises
         ConcurrentCommitError; its manifest/data files are unreferenced
         orphans for vacuum(). The lock serializes check+rename within the
         process — the only supported writer topology (see vacuum)."""
@@ -445,8 +451,8 @@ class MergeTable:
     def _commit_batch(self, snap: dict, batch_id: int) -> bool:
         """Commit a batch-carrying snapshot; returns True if THIS commit
         landed, False if the batch is already committed. A lost commit
-        race against a twin of the SAME batch id — an orphaned overlapped
-        merge thread replaying identical deterministic content — is
+        race against a twin of the SAME batch id — a stalled writer of an
+        earlier attempt replaying identical deterministic content — is
         idempotent success, not an error: the table already holds exactly
         the intended rows (this writer's data dir, if any, is an orphan
         for vacuum()). Any other advancing writer re-raises."""

@@ -73,7 +73,9 @@ def main() -> int:
 
     from dataflow_opinion_analysis_spark.session import get_spark
 
-    spark = get_spark(app_name="drive_contract", master="local[16]")
+    # one task slot per core the process may run on
+    cores = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="drive_contract", master=f"local[{cores}]")
     rc = 0
 
     n = mod.entry(spark).count()

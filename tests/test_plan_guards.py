@@ -225,3 +225,16 @@ def test_asof_join_is_single_user_shuffle(spark):
         if "Exchange hashpartitioning" in ln and ("+-" in ln or ln.startswith("*"))
     ]
     assert len(tree) <= 1, plan[:3000]
+
+
+def test_indexer_soft_dedupe_verdicts_evaluated_once(spark):
+    """The soft-dedupe verdicts are computed once: the routed winners are
+    held, and the soft winners and the soft dupes both read them. The
+    webresource frame, whose soft-dupe branch reads those verdicts, then
+    plans none of the soft-dedupe aggregates again."""
+    from dataflow_opinion_analysis_spark.plans.indexer import build_indexer
+    from dataflow_opinion_analysis_spark.sources.transcripts import derive_transcripts
+
+    out = build_indexer(derive_transcripts(spark, SF_DIR), persist=True)
+    plan = plan_of(out.webresource)
+    assert "HashAggregate" not in plan, plan[:4000]

@@ -641,3 +641,152 @@ def test_assume_new_matches_full_merge(spark, tmp_path):
     # fencing state identical too
     assert (fast.current_snapshot()["batch_ranges"]
             == full.current_snapshot()["batch_ranges"])
+
+
+_TURN_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+
+def _write_turns(spark, path, conv_id, start, n, first_idx=0):
+    t0 = pd.Timestamp(start)
+    spark.createDataFrame(
+        [(conv_id, first_idx + i, "user", f"turn {first_idx + i} of {conv_id} is great",
+          None, (t0 + pd.Timedelta(minutes=i)).to_pydatetime()) for i in range(n)],
+        _TURN_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(path)
+
+
+def _wait_for_batch(listener, batch_id):
+    """Listener events arrive asynchronously: wait until ``listener`` has
+    recorded the progress of ``batch_id``."""
+    import time as _time
+
+    for _ in range(100):
+        if any(r["batch_id"] >= batch_id for r in listener.rows):
+            return
+        _time.sleep(0.2)
+    raise AssertionError(f"listener never saw batch {batch_id}")
+
+
+def test_turns_dropped_by_watermark_counted_late(spark, tmp_path):
+    """A turn behind BOTH of Spark's watermarks never reaches the thread
+    assembler: Spark's state operator drops it. The query listener counts
+    it as ``n_late`` in the metrics table, and no sink row exists for it.
+    (test_late_turns_counted_not_sunk covers a turn between the two
+    watermarks, which the assembler itself routes late.)"""
+    path = str(tmp_path / "t")
+    _write_turns(spark, path, "c1", "2024-01-01 00:00:00", 3)
+    _append_flush(spark, path, "2024-06-01 00:00:00")
+    q, sinks = run_indexer_stream(
+        spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        watermark="5 minutes", max_files_per_trigger=2, soft_dedupe_enabled=False,
+    )
+    try:
+        # two triggers: the second moves both watermarks to 2024-05-31 23:55
+        q.processAllAvailable()
+        _append_flush(spark, path, "2024-06-01 00:00:01", turn_idx=1)
+        q.processAllAvailable()
+        spark.createDataFrame(
+            [("c1", 3, "user", "late turn is great", None,
+              datetime.datetime(2024, 1, 1, 0, 1, 30))], _TURN_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(path)
+        q.processAllAvailable()
+        last = q.lastProgress["batchId"]
+    finally:
+        q.stop()
+    _wait_for_batch(sinks.query_metrics, last)
+    spark.streams.removeListener(sinks.query_metrics)
+    m = spark.read.parquet(sinks.metrics_dir)
+    assert m.agg(F.sum("n_late")).collect()[0][0] == 1
+    wr = sinks.webresource.read()
+    assert wr.filter(F.col("CollectionItemId") == "c1:3").count() == 0
+    assert wr.filter(F.col("CollectionItemId") == "c1:0").count() == 1
+
+
+def test_failed_sink_write_leaves_no_merge_running(spark, tmp_path, monkeypatch):
+    """When one sink merge raises, the micro-batch fails only after every
+    other sink write of that batch has ended: no merge thread outlives the
+    failed process_batch. The content-index merge is held until the
+    document merge has raised, then for as long as process_batch runs."""
+    import os
+    import threading
+
+    from dataflow_opinion_analysis_spark.streaming import pipeline
+    from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
+
+    doc_raised, released = threading.Event(), threading.Event()
+    ci_threads, alive_at_raise = [], []
+    merge, process_batch = MergeTable.merge, pipeline.process_batch
+
+    def held_or_failing_merge(self, batch, batch_id, **kw):
+        name = os.path.basename(self.path)
+        if name == "content_index":
+            ci_threads.append(threading.current_thread())
+            doc_raised.wait(60)
+            released.wait(8)
+        elif name == "document":
+            doc_raised.set()
+            raise RuntimeError("document merge failed")
+        return merge(self, batch, batch_id, **kw)
+
+    def watched(*a, **k):
+        try:
+            return process_batch(*a, **k)
+        except Exception:
+            alive_at_raise.extend(t.is_alive() for t in ci_threads)
+            released.set()
+            raise
+
+    monkeypatch.setattr(MergeTable, "merge", held_or_failing_merge)
+    monkeypatch.setattr(pipeline, "process_batch", watched)
+    path = str(tmp_path / "t")
+    _write_turns(spark, path, "c1", "2024-01-01 00:00:00", 3)
+    _append_flush(spark, path, "2024-06-01 00:00:00")
+    try:
+        with pytest.raises(Exception, match="document merge failed"):
+            _run_stream(spark, path, tmp_path / "out", tmp_path / "ckpt", soft=False)
+    finally:
+        released.set()
+    assert ci_threads, "the content-index merge never ran"
+    assert alive_at_raise == [False] * len(ci_threads)
+
+
+def test_micro_batch_reads_sinks_at_stream_width(spark, tmp_path, monkeypatch):
+    """Every sink read a micro-batch makes (content-index claims,
+    fingerprint store, empty or not) is planned on the micro-batch's own
+    session, at the stream width, not on the caller's session width."""
+    import os
+
+    from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    widths = []
+    read = MergeTable.read
+
+    def recording_read(self, *a, **k):
+        df = read(self, *a, **k)
+        widths.append((os.path.basename(self.path), df.sparkSession.conf.get(key)))
+        return df
+
+    monkeypatch.setattr(MergeTable, "read", recording_read)
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(cores + 3))
+    try:
+        q, _ = run_indexer_stream(
+            spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            watermark="5 minutes", max_files_per_trigger=2,
+            cross_batch_near_dedupe=True,
+        )
+        # two rounds: the second round's reads find the first round's files
+        for day, flush in (("2024-01-01", "2024-06-01"), ("2024-07-01", "2024-12-01")):
+            _write_turns(spark, path, f"c-{day}", f"{day} 00:00:00", 3)
+            _append_flush(spark, path, f"{flush} 00:00:00")
+            q.processAllAvailable()
+        q.stop()
+    finally:
+        spark.conf.set(key, prev)
+    assert {"content_index", "fingerprints"} <= {n for n, _ in widths}
+    assert sum(n == "content_index" for n, _ in widths) >= 2
+    assert all(w == str(cores) for _, w in widths), widths
