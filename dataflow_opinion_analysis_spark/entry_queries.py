@@ -182,23 +182,23 @@ def q_stats_stattopic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
                 tables=("stattopic",),
             )
             for b, pred in enumerate([f"<= {thr}", f"> {thr}"]):
-                # assume_unique: each frame is a day-range split of a
+                # assume_new: each frame is a day-range split of a
                 # hash-keyed fact table that is key-unique by
                 # construction (exact+soft dedupe winners / per-passage
-                # hashes / per-turn WR hashes), so the in-batch
-                # dropDuplicates wide shuffle is pure overhead; the
-                # merge's HLL tripwire still guards gross violations
+                # hashes / per-turn WR hashes), and each key has one
+                # day, so no key of one wave is in another; the merge's
+                # HLL tripwire still guards gross violations
                 t_doc.merge(
                     out.document.where(f"PublicationDateId {pred}"), b,
-                    assume_unique=True,
+                    assume_new=True,
                 )
                 t_sent.merge(
                     out.sentiment.where(f"DocumentDateId {pred}"), b,
-                    assume_unique=True,
+                    assume_new=True,
                 )
                 t_wr.merge(
                     out.webresource.where(f"PublicationDateId {pred}"), b,
-                    assume_unique=True,
+                    assume_new=True,
                 )
                 consumer.refresh()
             return materialize(

@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from dataflow_opinion_analysis_spark.session import materialize
-
 K = 32  # minhash permutations
 SHINGLE_N = 3
 JACCARD_THRESHOLD = 0.5
@@ -295,7 +293,7 @@ def stateful_near_dedupe(stream: DataFrame) -> DataFrame:
 # thread assembler already is one), so the production pipeline keeps the
 # fingerprint state in an exactly-once MergeTable instead — the same
 # pattern the exact-dedupe content index uses. Restart safety comes from
-# the table, not the state store.
+# the table, not the state store; process_batch writes it.
 # ---------------------------------------------------------------------------
 
 FINGERPRINT_SCHEMA = (
@@ -310,12 +308,13 @@ VERDICT_OUT_SCHEMA = (
 )
 
 
-def fingerprint_dedupe_batch(winners, store, batch_id: int):
+def fingerprint_dedupe_batch(winners, store, batch_id: int) -> DataFrame:
     """Cross-batch near-dedupe for one micro-batch: compare the batch's
-    winners against the durable fingerprint store per soft key, admit new
-    fingerprints (insert-if-absent MERGE, replay-safe), and return the
-    verdict frame (document_hash, is_dupe, winner_document_hash,
-    est_jaccard).
+    winners against the durable fingerprint store per soft key. Writes
+    nothing: returns the lazy verdict frame (document_hash, is_dupe,
+    winner_document_hash, est_jaccard), whose rows also carry the store
+    row (``sig`` NULL unless admitted) that ``admitted_fingerprints``
+    selects for the caller's merge.
 
     Shapes: the store is semi-joined down to THIS batch's soft keys and
     recency-capped to MAX_FPRINTS rows per key (LRU analogue) before the
@@ -323,7 +322,7 @@ def fingerprint_dedupe_batch(winners, store, batch_id: int):
     O(history). Rows inside a group decide in (conv_id, turn_idx) order,
     identical to the keyed-state operator (decide_group is shared).
 
-    Replay safety: if a prior attempt of THIS batch_id crashed after the
+    Replay safety: if a prior attempt of THIS batch_id crashed after its
     fingerprint merge committed but before the document merge did, the
     store already holds this batch's own fingerprints — without a fence
     every previously admitted doc would self-match at similarity 1.0 and
@@ -407,22 +406,10 @@ def fingerprint_dedupe_batch(winners, store, batch_id: int):
             }
         )
 
-    verdicts = materialize(
+    verdicts = (
         keyed.groupBy(*keys)
         .cogroup(stored.groupBy(*keys))
-        .applyInPandas(fn, VERDICT_OUT_SCHEMA),
-        "shared",
-    )
-    store.merge(
-        verdicts.filter(F.col("sig").isNotNull()).select(
-            "soft_title",
-            "len_bucket",
-            "document_hash",
-            "sig",
-            F.lit(SIG_VERSION).alias("sig_version"),
-            F.lit(int(batch_id)).cast("long").alias("store_batch_id"),
-        ),
-        batch_id,
+        .applyInPandas(fn, VERDICT_OUT_SCHEMA)
     )
     # belt-and-braces self-winner guard (see docstring): with the batch-id
     # fence this cannot fire, but a dupe-of-itself verdict must never drop
@@ -435,6 +422,17 @@ def fingerprint_dedupe_batch(winners, store, batch_id: int):
         .otherwise(F.col("document_hash"))
         .alias("winner_document_hash"),
         "est_jaccard",
+        *keys,
+        "sig",
+        F.lit(SIG_VERSION).alias("sig_version"),
+        F.lit(int(batch_id)).cast("long").alias("store_batch_id"),
+    )
+
+
+def admitted_fingerprints(verdicts: DataFrame) -> DataFrame:
+    """The store rows (FINGERPRINT_SCHEMA) a verdict frame admitted."""
+    return verdicts.filter(F.col("sig").isNotNull()).select(
+        "soft_title", "len_bucket", "document_hash", "sig", "sig_version", "store_batch_id"
     )
 
 

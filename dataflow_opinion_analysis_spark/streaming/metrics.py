@@ -16,6 +16,9 @@ The listener records only the query run it was attached for, the first
 one started after ``attach``. Turns that Spark's watermark filter drops
 before they reach the thread assembler (``numRowsDroppedByWatermark``)
 are appended to the per-batch metrics directory as ``n_late``.
+
+The metrics directory holds one row per writer and batch id, so a
+replayed batch id leaves its first row standing and counts nothing twice.
 """
 
 from __future__ import annotations
@@ -23,26 +26,29 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
-import uuid
 
 from pyspark.sql.streaming import StreamingQueryListener
 
 METRICS_SCHEMA = (
     "batch_id long, n_input long, n_ok long, n_late long, n_overflow long, "
-    "n_exact_dupes long, n_soft_dupes long, n_documents long, n_sentiments long, "
-    "max_event_ts timestamp"
+    "n_documents long, n_sentiments long, max_event_ts timestamp"
 )
 
 
-def write_batch_row(metrics_dir: str, *, max_event_ts, **counts) -> None:
-    """Append one per-batch metrics row as a parquet file, written
-    driver-side with pyarrow: the row is driver-local lineage data and a
-    distributed write job for a single row is pure scheduler overhead.
-    Readable by ``spark.read.parquet(metrics_dir)`` (tests do exactly
-    that) — column set mirrors METRICS_SCHEMA."""
+def write_batch_row(metrics_dir: str, writer: str, *, max_event_ts, **counts) -> None:
+    """Write ``writer``'s metrics row for ``batch_id`` as one parquet file,
+    unless one exists: the first row for a (writer, batch id) stands, so a
+    replayed batch counts nothing twice. Written driver-side with
+    pyarrow: the row is driver-local lineage data and a distributed write
+    job for a single row is pure scheduler overhead. Readable by
+    ``spark.read.parquet(metrics_dir)`` (tests do exactly that) — column
+    set mirrors METRICS_SCHEMA."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    path = os.path.join(metrics_dir, f"{writer}-{counts['batch_id']:010d}.parquet")
+    if os.path.exists(path):
+        return
     os.makedirs(metrics_dir, exist_ok=True)
     cols = {k: pa.array([v], type=pa.int64()) for k, v in counts.items()}
     # tz-aware (isAdjustedToUTC=true) to match rows a Spark TimestampType
@@ -53,9 +59,9 @@ def write_batch_row(metrics_dir: str, *, max_event_ts, **counts) -> None:
         [max_event_ts], type=pa.timestamp("us", tz="UTC")
     )
     table = pa.table(cols)
-    tmp = os.path.join(metrics_dir, f".tmp-{uuid.uuid4().hex}.parquet")
+    tmp = os.path.join(metrics_dir, f".tmp-{os.path.basename(path)}")
     pq.write_table(table, tmp)
-    os.rename(tmp, os.path.join(metrics_dir, f"part-{uuid.uuid4().hex}.parquet"))
+    os.rename(tmp, path)
 
 
 def _parse_ts(s: str | None) -> _dt.datetime | None:
@@ -92,9 +98,9 @@ class ThroughputListener(StreamingQueryListener):
         dropped = sum(s.numRowsDroppedByWatermark for s in p.stateOperators or [])
         if dropped and self.metrics_dir:
             write_batch_row(
-                self.metrics_dir, batch_id=p.batchId, n_input=0, n_ok=0,
-                n_late=dropped, n_overflow=0, n_exact_dupes=0, n_soft_dupes=0,
-                n_documents=0, n_sentiments=0, max_event_ts=None,
+                self.metrics_dir, "dropped", batch_id=p.batchId, n_input=0,
+                n_ok=0, n_late=dropped, n_overflow=0, n_documents=0,
+                n_sentiments=0, max_event_ts=None,
             )
         et = p.eventTime or {}
         wm = _parse_ts(et.get("watermark"))

@@ -21,10 +21,11 @@
            fused passage fan-out (doc keys ride the Arrow stage — the
                               sentiment branch needs no join)
          and back in process_batch, one write group:
-           MERGE into the content index, webresource/document/sentiment
-           (and the dead letter in strict mode) MergeTables
-           (exactly-once: committed batch-ids + key anti-join)
-           append late-turn counts to a metrics table
+           one narrow MERGE into each store the batch writes: the content
+           index, webresource/document/sentiment, the dead letter in
+           strict mode and the fingerprint store in cross-batch mode
+           (exactly-once: committed batch-ids + keys new by construction)
+           one per-batch row of counts in a metrics directory
 
 Checkpoint + resume: the file-stream source records per-file offsets in
 ``checkpointLocation`` and the state store snapshots the keyed thread
@@ -58,19 +59,19 @@ from dataflow_opinion_analysis_spark.sources.transcripts import read_transcripts
 from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
 
 # per-batch routing-map broadcast ceiling (rows ~ 200B each in the build
-# hashmap => ~400MB at the default; raise/lower via env for deployments
-# with very large triggers or very small executors)
-_BROADCAST_MAPPING_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_MAPPING_MAX_ROWS", "2000000")
-)
+# hashmap => ~400MB)
+_BROADCAST_MAPPING_MAX_ROWS = 2_000_000
 
 # durable keyed dedupe state: first winner per content hash. Lives as a
 # MergeTable (not the document sink) because a winner eliminated later by
 # soft dedupe must STILL claim its content hash — otherwise a later
 # micro-batch would re-elect a different winner and webresource DocumentHash
-# pointers would diverge from the batch oracle.
+# pointers would diverge from the batch oracle. A claim names its winner
+# row by ``winner_web_resource_hash`` (one turn version); claims written
+# before that column existed read it as NULL.
 CONTENT_INDEX_SCHEMA = (
-    "content_hash string, winner_document_hash string, pub_date_id int"
+    "content_hash string, winner_document_hash string, pub_date_id int, "
+    "winner_web_resource_hash string"
 )
 
 
@@ -141,7 +142,7 @@ def process_batch(
     enrich_ratio: float = 0.0,
     strict_scoring: bool = False,
     cross_batch_near_dedupe: bool = False,
-) -> dict:
+) -> None:
     """One micro-batch of assembled turns -> MERGE commits. Pure function
     of (batch content, sink state); replay-safe via MergeTable.
 
@@ -155,14 +156,16 @@ def process_batch(
     built on the caller's session would plan the claim and fingerprint
     reads, and every join that starts from them, at the caller's width."""
     sinks = sinks.on(assembled.sparkSession)
-    # the batch's sink writes, one list. The empty batch fences the same
-    # tables, plus the fingerprint store, which fingerprint_dedupe_batch
-    # writes itself.
+    # the batch's durable writes, one list; the empty batch fences the
+    # same tables
     written = ["content_index", "document", "sentiment", "webresource"]
     if strict_scoring:
         # K2/F5 failure routing: docs the NLP stage raised on reach ONLY
         # the dead-letter sink (reference side-output semantics)
         written.append("dead_letter")
+    cross_batch = soft_dedupe_enabled and cross_batch_near_dedupe
+    if cross_batch:
+        written.append("fingerprints")
 
     # every persist is recorded here and released at the end of the batch
     # regardless of which flag branches were taken — rebinding a name to a
@@ -200,20 +203,16 @@ def process_batch(
         # re-batch the same files under shifted ids, and the fence only
         # holds if the live run left no id gaps
         # (tests/test_streaming.py::test_exactly_once_replay).
-        fenced = list(written)
-        if soft_dedupe_enabled and cross_batch_near_dedupe:
-            fenced.append("fingerprints")
-        for name in fenced:
+        for name in written:
             getattr(sinks, name).record_empty(batch_id)
         metrics.write_batch_row(
-            sinks.metrics_dir, batch_id=int(batch_id), n_input=0, n_ok=0,
-            n_late=0, n_overflow=0, n_exact_dupes=0, n_soft_dupes=0,
-            n_documents=0, n_sentiments=0, max_event_ts=stats.max_ts,
+            sinks.metrics_dir, "batch", batch_id=int(batch_id), n_input=0,
+            n_ok=0, n_late=0, n_overflow=0, n_documents=0, n_sentiments=0,
+            max_event_ts=stats.max_ts,
         )
         for df in persisted:
             df.unpersist()
-        return {"batch_id": batch_id, "n_input": 0, "n_late": 0,
-                "n_documents": 0, "n_sentiments": 0, "n_failed": 0}
+        return
 
     ontime = assembled.filter(F.col("status") != "late")
 
@@ -252,9 +251,11 @@ def process_batch(
     #    claim — exactly first-winner-by-event-time, since micro-batches
     #    arrive in watermark order);
     # 3. route EVERY row through the post-merge mapping: a row is a winner
-    #    iff the index maps its content hash to its own document hash.
-    #    This repoints in-batch dupes of already-claimed content to the
-    #    original winner, matching the batch-global oracle.
+    #    iff the claim on its content hash names this row (its
+    #    web_resource_hash: a resent turn version shares the winner's
+    #    document hash, not its row). This repoints in-batch dupes of
+    #    already-claimed content to the original winner, matching the
+    #    batch-global oracle.
     inbatch_winners, _ = dedupe.exact_dedupe(index_keys)
     # The content index grows monotonically (one row per distinct content
     # hash ever ingested) — broadcasting it per micro-batch would grow
@@ -270,16 +271,19 @@ def process_batch(
     # row_number()==1 per content_hash). Routing reads the cached claim
     # frames, not the store, so the store write joins the write group.
     batch_hashes = index_keys.select("content_hash")
+    claims = sinks.content_index.read()
+    if "winner_web_resource_hash" not in claims.columns:  # an older index
+        claims = claims.withColumn("winner_web_resource_hash", F.lit(None).cast("string"))
     prior_claims = pin(
-        sinks.content_index.read()
-        .join(batch_hashes, "content_hash", "left_semi")
-        .select("content_hash", "winner_document_hash")
+        claims.join(batch_hashes, "content_hash", "left_semi")
+        .select("content_hash", "winner_document_hash", "winner_web_resource_hash")
     )
     new_claims = pin(
         inbatch_winners.select(
             "content_hash",
             F.col("expected_document_hash").alias("winner_document_hash"),
             "pub_date_id",
+            F.col("web_resource_hash").alias("winner_web_resource_hash"),
         )
         .join(prior_claims, "content_hash", "left_anti")
     )
@@ -287,8 +291,15 @@ def process_batch(
     # re-reading the post-merge index (every batch hash has a winner:
     # previously claimed hashes are in prior_claims, the rest have an
     # in-batch winner), including under replay of a committed index
-    # (new_claims recomputes empty, prior_claims covers everything).
+    # (new_claims recomputes empty, prior_claims holds this batch's own
+    # claims, which name the same rows).
     mapping = prior_claims.unionByName(new_claims.drop("pub_date_id"))
+    # a claim written before claims named their row routes by document
+    # hash, as it did then, so a replay of its batch keeps its winners
+    won = F.coalesce(
+        F.col("web_resource_hash") == F.col("winner_web_resource_hash"),
+        F.col("expected_document_hash") == F.col("winner_document_hash"),
+    )
     # the mapping is O(batch distinct hashes) <= n_input — bounded by the
     # trigger, NOT by table history — so for ordinary trigger sizes it is
     # broadcastable and the routing join needs no shuffle of the wide
@@ -302,27 +313,30 @@ def process_batch(
         else mapping
     )
     routed = to_index.join(mapping_wide, "content_hash", "left")
-    winners = routed.filter(
-        F.col("expected_document_hash") == F.col("winner_document_hash")
-    ).drop("winner_document_hash")
+    winners = routed.filter(won).drop(
+        "winner_document_hash", "winner_web_resource_hash"
+    )
     # dupe re-pointing runs over the NARROW key cache — the webresource
     # branch needs no text, so it must not re-derive the wide frame. This
     # join stays a shuffle join on purpose: ic_keys is already cached
     # pre-partitioned on the key, and a second broadcast would cost a
     # second per-batch driver collect for no avoided wide shuffle.
-    exact_dupes = index_keys.join(mapping, "content_hash", "left").filter(
-        F.col("expected_document_hash") != F.col("winner_document_hash")
-    )
+    exact_dupes = index_keys.join(mapping, "content_hash", "left").filter(~won)
 
+    frames = {"content_index": new_claims}
     if not soft_dedupe_enabled:
         near_dupe_verdicts = None
-    elif cross_batch_near_dedupe:
+    elif cross_batch:
         # MinHash fingerprint semantics (in-batch sequential admit +
         # durable cross-batch store) instead of the whole-batch vote
         # rule — catches a near-dup arriving micro-batches later, which
         # the per-batch vote rule cannot
         def near_dupe_verdicts(w: DataFrame) -> DataFrame:
-            return dedupe_state.fingerprint_dedupe_batch(w, sinks.fingerprints, batch_id)
+            verdicts = pin(
+                dedupe_state.fingerprint_dedupe_batch(w, sinks.fingerprints, batch_id)
+            )
+            frames["fingerprints"] = dedupe_state.admitted_fingerprints(verdicts)
+            return verdicts
     else:
         near_dupe_verdicts = vote_rule_verdicts
     out = index_after_exact_dedupe(
@@ -331,11 +345,10 @@ def process_batch(
         enrich_ratio=enrich_ratio, strict_scoring=strict_scoring,
         dead_letter_batch_id=int(batch_id),
     )
-    frames = {
-        "content_index": new_claims, "document": out.document,
-        "sentiment": out.sentiment, "webresource": out.webresource,
-        "dead_letter": out.dead_letter,
-    }
+    frames.update(
+        document=out.document, sentiment=out.sentiment,
+        webresource=out.webresource, dead_letter=out.dead_letter,
+    )
 
     # materialize the pinned stages ONCE before the sink merges: the last
     # pin is the most downstream (the soft-dedupe routed or enriched
@@ -351,56 +364,45 @@ def process_batch(
     # still atomic per table. Leaving the block joins every thread, so a
     # failed merge fails the batch with no write still running.
     #
-    # assume_new: each fact-table merge is ONE narrow write job — no
-    # in-batch dropDuplicates shuffle, no bounds job, no anti-join scan
-    # of the (growing) table. Soundness chain, per sink:
-    #   in-batch uniqueness — document/sentiment fan out from winners,
-    #     which are row-unique per content_hash (exact_dedupe window) and
-    #     hence per DocumentHash; webresource keys are per-turn, and the
-    #     thread assembler's redelivery fence makes emitted turn versions
-    #     unique (streaming/threads.py);
-    #   cross-batch newness — a turn version is emitted in exactly one
-    #     micro-batch (assembler fence), and re-posted content is routed
-    #     to the dupe branches by the content-index first-claim mapping,
-    #     so winner DocumentHashes are disjoint across batches;
-    #   replay — the batch-id fence short-circuits committed tables, and
-    #     an uncommitted table's replayed batch recomputes the identical
-    #     rows (state-store replay + replay-fenced fingerprint reads).
-    # tests/test_streaming.py::test_assume_new_matches_full_merge pins the
-    # merge paths equal under these preconditions (which are themselves
-    # pinned by tests/test_threads_fence.py and
-    # test_redelivered_turns_emitted_once); merge() itself still
-    # raises pre-commit on a gross uniqueness violation (Observation
-    # guard). This is the O(batch)-not-O(table) requirement: at 10^12
-    # turns the sinks cannot re-scan their history every commit. The
-    # dead letter keeps the full merge.
+    # assume_new: every merge is ONE narrow write job (no dedupe shuffle,
+    # no anti-join scan of the growing table; O(batch), not O(table)).
+    # Soundness chain, for all six stores:
+    #   keys — each is a per-batch winner's document_hash or derives from
+    #     one (document, sentiment, dead letter, fingerprints), a content
+    #     hash this batch claims (anti-joined against prior claims), or a
+    #     turn version (webresource);
+    #   in-batch uniqueness — one winner row per content_hash, routed by
+    #     row identity; the thread assembler's redelivery fence makes
+    #     emitted turn versions unique (streaming/threads.py);
+    #   cross-batch newness — a content hash is claimed in one batch and
+    #     later rows with it route to the dupe branches, so winner
+    #     document hashes are new in every batch; a turn version is
+    #     emitted in exactly one micro-batch;
+    #   replay — the batch-id fence skips committed tables, and an
+    #     uncommitted table's replayed batch recomputes the same rows
+    #     (state-store replay, the batch's own claims naming the same
+    #     winners, the store_batch_id < batch_id fingerprint read).
+    # test_streaming.py pins this (test_assume_new_matches_full_merge,
+    # test_write_group_crash_replay); merge() still raises pre-commit on
+    # a gross uniqueness violation.
     with _futures.ThreadPoolExecutor(max_workers=len(written)) as pool:
         futures = {
             name: pool.submit(getattr(sinks, name).merge, frames[name], batch_id,
-                              assume_new=name != "dead_letter")
+                              assume_new=True)
             for name in written
         }
         rows = {name: f.result() for name, f in futures.items()}
-    n_docs, n_sents = rows["document"], rows["sentiment"]
-    n_failed = rows.get("dead_letter", 0)
 
-    max_ts = stats.max_ts
-    # dupe counts are diagnostics only; -1 when skipped (recomputing them
-    # would re-run the scorer chain)
-    n_exact, n_soft = -1, -1
     metrics.write_batch_row(
-        sinks.metrics_dir, batch_id=int(batch_id), n_input=int(n_input),
-        n_ok=int(n_input - n_late - n_overflow), n_late=int(n_late),
-        n_overflow=int(n_overflow), n_exact_dupes=int(n_exact),
-        n_soft_dupes=int(n_soft), n_documents=int(n_docs),
-        n_sentiments=int(n_sents), max_event_ts=max_ts,
+        sinks.metrics_dir, "batch", batch_id=int(batch_id),
+        n_input=int(n_input), n_ok=int(n_input - n_late - n_overflow),
+        n_late=int(n_late), n_overflow=int(n_overflow),
+        n_documents=int(rows["document"]), n_sentiments=int(rows["sentiment"]),
+        max_event_ts=stats.max_ts,
     )
 
     for df in persisted:
         df.unpersist()
-    return {"batch_id": batch_id, "n_input": n_input, "n_late": n_late,
-            "n_documents": n_docs, "n_sentiments": n_sents,
-            "n_failed": n_failed}
 
 
 def run_indexer_stream(
@@ -426,15 +428,17 @@ def run_indexer_stream(
     of ``checkpoint_dir``: a restart from an existing checkpoint keeps the
     width the query first started with, even on a different core count.
 
-    ``auto_compact_files``: when the content index — the one sink that is
-    RE-READ every micro-batch (claim derivation) — exceeds this many data
-    files, fold its small files with MergeTable.compact_small_files()
-    before the next trigger. A micro-batch sink accretes one directory
-    per trigger, so an uncompacted 10^12-turn stream would pay one scan
-    task per historical batch on every claim read; with compaction the
-    read stays O(table bytes / 128MB) files. Runs on the foreachBatch
-    thread between batches (never concurrent with a writer); cost is
-    O(small bytes), amortized O(1) per batch. 0 disables.
+    ``auto_compact_files``: when a store the micro-batch RE-READS — the
+    content index (claim derivation) and, under
+    ``cross_batch_near_dedupe``, the fingerprint store — exceeds this
+    many data files, fold its small files with
+    MergeTable.compact_small_files() before the next trigger. A
+    micro-batch sink accretes one directory per trigger, so an
+    uncompacted 10^12-turn stream would pay one scan task per historical
+    batch on every read; with compaction the read stays O(table bytes /
+    128MB) files. Runs on the foreachBatch thread between batches (never
+    concurrent with a writer); cost is O(small bytes), amortized O(1) per
+    batch. 0 disables.
 
     ``state_store``: ``"hdfs"`` (default) keeps keyed thread state in
     executor heap with per-batch delta files — fine up to millions of
@@ -479,8 +483,8 @@ def run_indexer_stream(
         process_batch(df, bid, sinks, processing_time, soft_dedupe_enabled,
                       enrich_ratio, strict_scoring, cross_batch_near_dedupe)
         if auto_compact_files:
-            ci = sinks.content_index
-            if len(ci.current_snapshot()["files"]) >= auto_compact_files:
-                ci.compact_small_files(min_files=2)
+            for store in (sinks.content_index, sinks.fingerprints):
+                if len(store.current_snapshot()["files"]) >= auto_compact_files:
+                    store.compact_small_files(min_files=2)
 
     return start_stream(assembled, _fb, checkpoint_dir), sinks

@@ -15,11 +15,13 @@ and is the exactly-once sink used from ``foreachBatch``
 IndexerPipeline.java:622-676 + :400-416, replaced by a genuinely
 idempotent keyed sink per the north rule).
 
-Exactly-once under micro-batch replay is guaranteed twice over:
-1. committed ``batch_id``s are recorded in the manifest — a replayed
-   batch id is a no-op before any data is read;
-2. the MERGE itself anti-joins on the key columns, so even a *partially*
-   committed retry inserts no duplicate keys.
+Exactly-once under micro-batch replay: committed ``batch_id``s are
+recorded in the manifest, so a replayed batch id is a no-op before any
+data is read. Beyond that fence ``merge`` has two modes: the full MERGE
+also anti-joins on the key columns, so even a *partially* committed
+retry inserts no duplicate keys; ``assume_new`` is one narrow write whose
+caller guarantees new keys (argued for the streaming sinks in
+``streaming/pipeline.process_batch``).
 
 Scale design:
 
@@ -470,45 +472,36 @@ class MergeTable:
         self,
         batch: DataFrame,
         batch_id: int,
-        assume_unique: bool = False,
         assume_new: bool = False,
     ) -> int:
         """Insert rows of `batch` whose key is absent. Returns rows written.
         Idempotent: replaying a committed batch_id is a no-op.
 
-        ``assume_unique``: the caller asserts the batch is already
-        key-unique — skips the in-batch ``dropDuplicates`` (a full wide
-        shuffle of the batch). Sound when the frame is one row per key by
-        construction (e.g. the streaming winners are row_number()==1 per
-        content_hash, and the thread assembler fences redelivered turn
-        versions — streaming/threads.py).
+        Two modes:
 
-        ``assume_new`` (implies ``assume_unique``): the caller asserts
-        every key is absent from the table — additionally skips the
-        bounds aggregation AND the anti-join scan of existing files, so
-        the merge is ONE narrow write job. Sound for the streaming
-        document/sentiment/webresource sinks, whose cross-batch key
-        disjointness is guaranteed upstream (content-index first-claim
-        routing + the assembler's redelivery fence) and whose replay
-        safety comes from the batch-id fence plus deterministic batch
-        recomputation. NOT sound for first-claim stores like the content
-        index, where the anti-join itself implements insert-if-absent.
-        At 100-TB scale this is the difference between O(batch) and
-        O(table) work per micro-batch: a sink that re-scans its whole
-        history every commit cannot stream.
-
-        A cheap runtime guard still runs under ``assume_unique``/
-        ``assume_new``: the write job observes approx_count_distinct of
-        the full key tuple (a struct of every key column) beside the row
-        count, and a gross violation
-        (>~10% duplicate keys, beyond the HLL sketch's error band) raises
-        BEFORE the manifest commit — the batch directory is left orphaned
-        for vacuum(), the table state is untouched.
+        - full (default): the batch is deduplicated by key (a wide
+          shuffle), its partition bounds prune the table's files, and an
+          anti-join against those files keeps only absent keys. This is
+          the insert-if-absent MERGE; a partially committed retry still
+          inserts no duplicate key.
+        - ``assume_new``: the caller asserts that the batch is key-unique
+          and that no key is already in the table. The merge is then ONE
+          narrow write job: no dropDuplicates, no bounds job, no
+          anti-join scan of existing files. Replay safety rests on the
+          batch-id fence alone, so a retry of an uncommitted batch must
+          recompute the same rows. At 100-TB scale this is the difference
+          between O(batch) and O(table) work per micro-batch: a sink that
+          re-scans its whole history every commit cannot stream. A cheap
+          runtime guard remains: the write job observes
+          approx_count_distinct of the full key tuple (a struct of every
+          key column) beside the row count, and a gross violation (>~10%
+          duplicate keys, beyond the HLL sketch's error band) raises
+          BEFORE the manifest commit — the batch directory is left
+          orphaned for vacuum(), the table state is untouched.
         """
         snap = self.current_snapshot()
         if _ranges_contains(snap["batch_ranges"], int(batch_id)):
             return 0
-        assume_unique = assume_unique or assume_new
 
         # in-batch key dedupe (deterministic smallest-first keeps goldens
         # stable). Persisted: the incoming frame is typically a lazy Arrow
@@ -516,27 +509,19 @@ class MergeTable:
         # and the anti-join+write would re-run that whole chain. Under
         # assume_new neither extra consumer exists, so the frame flows
         # straight into the single write job un-persisted.
-        deduped = batch if assume_unique else batch.dropDuplicates(self.key_cols)
-        persist_needed = not assume_new
-        if persist_needed:
-            deduped = deduped.persist()
+        deduped = batch if assume_new else batch.dropDuplicates(self.key_cols).persist()
         try:
-            # partition-stat bounds of the incoming batch (for file pruning);
-            # pointless when the table has no files yet
-            min_part = max_part = None
-            if (
-                self.partition_col is not None
-                and snap["files"]
-                and not assume_new
-            ):
-                b = deduped.agg(
-                    F.min(self.partition_col).alias("lo"),
-                    F.max(self.partition_col).alias("hi"),
-                ).collect()[0]
-                min_part, max_part = b["lo"], b["hi"]
-
             w = deduped
             if not assume_new:
+                # partition-stat bounds of the incoming batch (for file
+                # pruning); pointless when the table has no files yet
+                min_part = max_part = None
+                if self.partition_col is not None and snap["files"]:
+                    b = deduped.agg(
+                        F.min(self.partition_col).alias("lo"),
+                        F.max(self.partition_col).alias("hi"),
+                    ).collect()[0]
+                    min_part, max_part = b["lo"], b["hi"]
                 existing_files = self.files(min_part, max_part)
                 if existing_files:
                     existing_keys = self.spark.read.parquet(*existing_files).select(
@@ -554,7 +539,7 @@ class MergeTable:
                     F.min(self.partition_col).alias("lo"),
                     F.max(self.partition_col).alias("hi"),
                 ]
-            if assume_unique:
+            if assume_new:
                 # sketch the FULL key tuple: a composite-keyed table
                 # (e.g. (window_start, event_type)) is key-unique while
                 # any single column repeats, so a first-column-only
@@ -578,7 +563,7 @@ class MergeTable:
             # sketch's error band. Real violations (systematic duplication)
             # halve n_keys; exact guarantees come from the caller contract
             # and the pipeline's equivalence tests, not this tripwire.
-            if assume_unique and wrow["n"]:
+            if assume_new and wrow["n"]:
                 if wrow["n_keys"] < 0.9 * wrow["n"] - 4:
                     raise ValueError(
                         f"assume_unique violated on {self.path}: wrote "
@@ -586,7 +571,7 @@ class MergeTable:
                         f"{tuple(self.key_cols)} tuples; batch NOT committed"
                     )
         finally:
-            if persist_needed:
+            if not assume_new:
                 deduped.unpersist()
 
         n = wrow["n"]

@@ -99,8 +99,11 @@ def test_fingerprint_replay_does_not_self_dupe(spark, tmp_path):
     merge committed but BEFORE the document merge. The replayed batch must
     not read its own just-stored fingerprints — without the
     store_batch_id < batch_id fence every admitted doc self-matches at
-    similarity 1.0 and its document row is lost forever."""
+    similarity 1.0 and its document row is lost forever.
+    fingerprint_dedupe_batch writes nothing, so each attempt merges the
+    admitted rows itself, as the micro-batch's write group does."""
     from dataflow_opinion_analysis_spark.streaming.dedupe_state import (
+        admitted_fingerprints,
         fingerprint_dedupe_batch,
     )
 
@@ -110,11 +113,18 @@ def test_fingerprint_replay_does_not_self_dupe(spark, tmp_path):
          ("h2", "c2", 1, None, "entirely unrelated musings on shuffle partitions and codegen")],
         _WINNERS_SCHEMA,
     )
-    v1 = fingerprint_dedupe_batch(winners, store, batch_id=7).toPandas()
+
+    def attempt():
+        verdicts = fingerprint_dedupe_batch(winners, store, batch_id=7)
+        pdf = verdicts.toPandas()
+        store.merge(admitted_fingerprints(verdicts), 7, assume_new=True)
+        return pdf
+
+    v1 = attempt()
     assert not v1["is_dupe"].any()
     assert store.read().count() == 2
     # the replay: same batch id, store already holds this batch's state
-    v2 = fingerprint_dedupe_batch(winners, store, batch_id=7).toPandas()
+    v2 = attempt()
     assert not v2["is_dupe"].any(), "replayed batch self-matched its own fingerprints"
     assert (v2["winner_document_hash"] == v2["document_hash"]).all()
     # and the store merge stayed idempotent (batch id already committed)

@@ -118,9 +118,23 @@ def test_late_turns_counted_not_sunk(spark, tmp_path):
     assert m.agg(F.sum("n_late")).collect()[0][0] >= 1
 
 
+def _metrics_rows(metrics_dir) -> pd.DataFrame:
+    """The per-batch metrics rows, each with the writer its file names."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    return pd.concat([
+        pq.read_table(f).to_pandas().assign(writer=os.path.basename(f).split("-")[0])
+        for f in sorted(glob.glob(os.path.join(metrics_dir, "*.parquet")))
+    ], ignore_index=True)
+
+
 def test_exactly_once_replay(spark, tmp_path):
     """Re-processing the same batches (fresh checkpoint, same sink) leaves
-    the sink unchanged — MERGE idempotence under replay."""
+    the sink unchanged — MERGE idempotence under replay — and the metrics
+    keep one row per writer and batch id."""
     path = _gen(tmp_path, n_convs=20)
     _append_flush(spark, path)
     sinks = _run_stream(spark, path, tmp_path / "out", tmp_path / "ckpt1")
@@ -129,6 +143,7 @@ def test_exactly_once_replay(spark, tmp_path):
         "doc": sinks.document.read().count(),
         "sent": sinks.sentiment.read().count(),
     }
+    late1 = _metrics_rows(sinks.metrics_dir)["n_late"].sum()
     # same input replayed into the SAME sink with a new checkpoint: every
     # row re-delivered -> key anti-join must discard all of it
     sinks2 = _run_stream(spark, path, tmp_path / "out", tmp_path / "ckpt2")
@@ -138,6 +153,9 @@ def test_exactly_once_replay(spark, tmp_path):
         "sent": sinks2.sentiment.read().count(),
     }
     assert counts1 == counts2
+    m = _metrics_rows(sinks2.metrics_dir)
+    assert not m.duplicated(["writer", "batch_id"]).any()
+    assert m["n_late"].sum() == late1
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -610,6 +628,32 @@ def test_stream_auto_compacts_content_index(spark, tmp_path):
     assert winners.count() == 0  # every claim points at a real document
 
 
+def test_stream_auto_compacts_fingerprint_store(spark, tmp_path):
+    """Under cross_batch_near_dedupe the fingerprint store is read back
+    every micro-batch too, so auto_compact_files folds its small files
+    like the content index's, with its rows intact."""
+    path = _gen(tmp_path, n_convs=12, n_files=8)
+    _append_flush(spark, path)
+    q, sinks = run_indexer_stream(
+        spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        watermark="5 minutes", max_files_per_trigger=1,
+        cross_batch_near_dedupe=True, auto_compact_files=3,
+    )
+    q.processAllAvailable()
+    _append_flush(spark, path, "2030-01-01 01:00:00", turn_idx=1)
+    q.processAllAvailable()
+    q.stop()
+
+    fp = sinks.fingerprints
+    assert len(fp.current_snapshot()["files"]) < 4
+    assert any(s.get("operation") == "compact_small_files" for s in fp.snapshots())
+    assert _duplicate_keys(fp) == 0
+    stored = fp.read().select(F.col("document_hash").alias("DocumentHash"))
+    assert stored.count() > 0
+    # every stored fingerprint is an admitted winner's document
+    assert stored.join(sinks.document.read(), "DocumentHash", "left_anti").count() == 0
+
+
 def test_assume_new_matches_full_merge(spark, tmp_path):
     """The assume_new fast path (no in-batch dropDuplicates, no anti-join
     against the table) must land the same table as the full merge path,
@@ -790,3 +834,214 @@ def test_micro_batch_reads_sinks_at_stream_width(spark, tmp_path, monkeypatch):
     assert {"content_index", "fingerprints"} <= {n for n, _ in widths}
     assert sum(n == "content_index" for n, _ in widths) >= 2
     assert all(w == str(cores) for _, w in widths), widths
+
+
+STORES = ("webresource", "document", "sentiment", "content_index", "dead_letter", "fingerprints")
+
+# columns of the three fact sinks compared with batch. Parent links are
+# left out: for two versions of one turn, batch's lag() over turn_idx
+# order depends on how the tie between the versions falls.
+_FACT_COLS = {
+    "webresource": ["WebResourceHash", "DocumentHash", "CollectionItemId"],
+    "document": ["DocumentHash", "CollectionItemId", "Text"],
+    "sentiment": ["SentimentHash", "DocumentHash", "Text"],
+}
+
+
+def _duplicate_keys(table) -> int:
+    """Exact count of rows whose key another row of ``table`` repeats."""
+    rows = table.read()
+    return rows.count() - rows.select(*table.key_cols).distinct().count()
+
+
+def _assert_facts_match_batch(sinks, batch):
+    for name, cols in _FACT_COLS.items():
+        got, want = getattr(sinks, name).read(), getattr(batch, name)
+        if "CollectionItemId" in cols:
+            got, want = _no_flush(got), _no_flush(want)
+        a = normalize(got.select(cols).toPandas())
+        b = normalize(want.select(cols).toPandas())
+        assert len(a) == len(b), f"{name}: {len(a)} vs {len(b)}"
+        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
+def _drain(q, spark, path, flush_day):
+    """Two flushes on ``flush_day``: every turn before it is emitted."""
+    for i in range(2):
+        _append_flush(spark, path, f"{flush_day} 00:00:0{i}", turn_idx=i)
+        q.processAllAvailable()
+
+
+def _write_versions(spark, path):
+    """Turns c1:0 and c1:1, c1:1 sent again a minute later with the same
+    text, and an unrelated turn c2:0 — one file."""
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    rows = [
+        ("c1", 0, "the harbor lights were great against the winter fog"),
+        ("c1", 1, "our ferry crossing felt wonderful and calm all morning"),
+        ("c1", 1, "our ferry crossing felt wonderful and calm all morning"),
+        ("c2", 0, "terrible parking near the stadium ruined an awful evening"),
+    ]
+    spark.createDataFrame(
+        [(c, i, "user", txt, None, (t0 + pd.Timedelta(minutes=m)).to_pydatetime())
+         for m, (c, i, txt) in enumerate(rows)],
+        _TURN_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(path)
+
+
+def test_resent_turn_version_routes_as_dupe_across_batches(spark, tmp_path):
+    """A turn sent again with the same text at a later ts is a second
+    version of that turn: same content hash and document hash, its own
+    webresource row. Its content was claimed by an earlier micro-batch,
+    so it must route to the dupe branch — batch keeps one document row
+    and one sentiment row per hash, and so must the stream."""
+    path = str(tmp_path / "t")
+    _write_turns(spark, path, "c1", "2024-01-01 00:00:00", 2)
+    q, sinks = run_indexer_stream(
+        spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        watermark="5 minutes", max_files_per_trigger=2, soft_dedupe_enabled=False,
+    )
+    try:
+        _drain(q, spark, path, "2024-02-01")
+        _write_turns(spark, path, "c1", "2024-04-01 00:00:00", 1, first_idx=1)
+        _drain(q, spark, path, "2024-06-01")
+    finally:
+        q.stop()
+    wr = sinks.webresource.read().filter(F.col("CollectionItemId") == "c1:1")
+    assert wr.count() == 2 and wr.select("DocumentHash").distinct().count() == 1
+    for name in STORES:
+        assert _duplicate_keys(getattr(sinks, name)) == 0, name
+    batch = build_indexer(spark.read.parquet(path), persist=True, soft_dedupe_enabled=False)
+    _assert_facts_match_batch(sinks, batch)
+
+
+def test_two_versions_in_one_micro_batch_route_one_winner(spark, tmp_path):
+    """Two versions of one turn with the same text in ONE micro-batch:
+    the earlier is the winner, the later a dupe pointing at it."""
+    path = str(tmp_path / "t")
+    _write_versions(spark, path)
+    q, sinks = run_indexer_stream(
+        spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        watermark="5 minutes", max_files_per_trigger=2, soft_dedupe_enabled=False,
+    )
+    try:
+        _drain(q, spark, path, "2024-02-01")
+    finally:
+        q.stop()
+    assert sinks.document.read().filter(F.col("CollectionItemId") == "c1:1").count() == 1
+    for name in STORES:
+        assert _duplicate_keys(getattr(sinks, name)) == 0, name
+    batch = build_indexer(spark.read.parquet(path), persist=True, soft_dedupe_enabled=False)
+    _assert_facts_match_batch(sinks, batch)
+
+
+def test_legacy_claims_route_by_document_hash(spark, tmp_path):
+    """A content-index claim written before claims named their winner row
+    (no winner_web_resource_hash) routes by document hash: the turn
+    whose document hash it names is the winner, any other turn with that
+    content a dupe pointing at it. New claims name their row."""
+    from dataflow_opinion_analysis_spark.operators import ingest
+    from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
+
+    path = str(tmp_path / "t")
+    _write_turns(spark, path, "c1", "2024-01-01 00:00:00", 2)
+    # c2:0 repeats c1:1's text
+    spark.createDataFrame(
+        [("c2", 0, "user", "turn 1 of c1 is great", None, datetime.datetime(2024, 1, 1, 0, 5))],
+        _TURN_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(path)
+    c1_1 = (
+        ingest.derive_input_content(spark.read.parquet(path))
+        .filter(F.col("collection_item_id") == "c1:1")
+        .select("content_hash", "expected_document_hash")
+        .collect()[0]
+    )
+    legacy = MergeTable(
+        spark, str(tmp_path / "out" / "content_index"), key_cols=["content_hash"],
+        schema="content_hash string, winner_document_hash string, pub_date_id int",
+    )
+    # committed under a batch id the stream never uses
+    legacy.merge(spark.createDataFrame(
+        [(c1_1.content_hash, c1_1.expected_document_hash, 20240101)], legacy.schema), -1)
+    q, sinks = run_indexer_stream(
+        spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        watermark="5 minutes", max_files_per_trigger=2, soft_dedupe_enabled=False,
+    )
+    try:
+        _drain(q, spark, path, "2024-02-01")
+    finally:
+        q.stop()
+    docs = _no_flush(sinks.document.read()).toPandas()
+    assert sorted(docs["CollectionItemId"]) == ["c1:0", "c1:1"]
+    wr = sinks.webresource.read().filter(F.col("CollectionItemId") == "c2:0").collect()
+    assert [r.DocumentHash for r in wr] == [c1_1.expected_document_hash]
+    claims = {r.content_hash: r for r in sinks.content_index.read().collect()}
+    assert claims[c1_1.content_hash].winner_web_resource_hash is None
+    assert all(
+        r.winner_web_resource_hash is not None
+        for h, r in claims.items() if h != c1_1.content_hash
+    )
+
+
+@pytest.mark.parametrize("cross_batch", [False, True], ids=["exact", "near"])
+def test_write_group_crash_replay(spark, tmp_path, monkeypatch, cross_batch):
+    """A micro-batch whose document merge raises after its content-index
+    claims (and, under cross_batch_near_dedupe, its fingerprints) have
+    committed. The restart from the checkpoint replays the batch: the
+    committed stores are fenced, the batch's own claims route the same
+    winners, and every store ends with no duplicate key and the facts
+    equal batch."""
+    import os
+    import threading
+
+    from dataflow_opinion_analysis_spark.tables.mergetable import MergeTable
+
+    first = ["content_index"] + (["fingerprints"] if cross_batch else [])
+    committed = {name: threading.Event() for name in first}
+    calls, merge = [], MergeTable.merge
+
+    def crashing_merge(self, batch, batch_id, **kw):
+        name = os.path.basename(self.path)
+        if name == "document" and not any(c[0] == "crash" for c in calls):
+            assert all(e.wait(60) for e in committed.values())
+            calls.append(("crash", batch_id, 0))
+            raise RuntimeError("injected write-group crash")
+        n = merge(self, batch, batch_id, **kw)
+        calls.append((name, batch_id, n))
+        if name in committed:
+            committed[name].set()
+        return n
+
+    monkeypatch.setattr(MergeTable, "merge", crashing_merge)
+    path = str(tmp_path / "t")
+    _write_versions(spark, path)
+
+    def start():
+        return run_indexer_stream(
+            spark, path, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            watermark="5 minutes", max_files_per_trigger=2,
+            soft_dedupe_enabled=cross_batch, cross_batch_near_dedupe=cross_batch,
+        )
+
+    q, _ = start()
+    try:
+        with pytest.raises(Exception, match="injected write-group crash"):
+            _drain(q, spark, path, "2024-02-01")
+    finally:
+        q.stop()
+    (crashed,) = [bid for name, bid, _ in calls if name == "crash"]
+    q, sinks = start()
+    try:
+        q.processAllAvailable()
+        _drain(q, spark, path, "2024-06-01")
+    finally:
+        q.stop()
+    # the first attempt committed the claims (and fingerprints); the
+    # replay found them fenced
+    for name in first:
+        attempts = [n for m, bid, n in calls if m == name and bid == crashed]
+        assert len(attempts) == 2 and attempts[0] > 0 and attempts[1] == 0, (name, attempts)
+    for name in STORES:
+        assert _duplicate_keys(getattr(sinks, name)) == 0, name
+    batch = build_indexer(spark.read.parquet(path), persist=True, soft_dedupe_enabled=cross_batch)
+    _assert_facts_match_batch(sinks, batch)
